@@ -136,7 +136,7 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 # many distinct pretokens the whole word table fits the driver comfortably
 # (~100 B/row -> ~20 MB) and the per-merge Spark jobs are pure overhead —
 # the same small-side dispatch discipline as connected_components_auto's
-# driver union-find. At web scale (10^8-10^9 distinct pretokens) the
+# driver labelling. At web scale (10^8-10^9 distinct pretokens) the
 # distributed loop below is the plan.
 FIT_DRIVER_MAX_WORDS = 200_000
 

@@ -126,10 +126,11 @@ def _join_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     # table's post-aggregate size ESTIMATE can read tiny, and a
     # statically-planned broadcast of an unbounded pair table is exactly
     # the word_ngram OOM class (operators/dedup.py round-8 note). Pin the
-    # scale-safe sort-merge strategy.
+    # scale-safe sort-merge strategy on BOTH joins: a hint binds only the
+    # join directly above it.
     sig_a = sigs.select(F.col("url").alias("url_a"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("url").alias("url_b"), F.col("sig").alias("sig_b"))
-    return pairs.hint("merge").join(sig_a, "url_a").join(sig_b, "url_b")
+    return pairs.hint("merge").join(sig_a, "url_a").hint("merge").join(sig_b, "url_b")
 
 
 def _candidate_urls(pairs: DataFrame) -> DataFrame:
@@ -203,14 +204,14 @@ def _broadcast_score(
 
     spark = pairs.sparkSession
     flat, starts, lens, idx, viol = _collect_slice_flat(pairs, sigs, urls)
-    bc = spark.sparkContext.broadcast((flat, starts, lens, idx, set(viol.tolist())))
+    bc = spark.sparkContext.broadcast((flat, starts, lens, idx, viol))
     fields = [StructField("url_a", StringType()), StructField("url_b", StringType())]
     if emit_jaccard:
         fields.append(StructField("jaccard", DoubleType()))
     out_schema = StructType(fields)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vals, st, ln, table, bad_rows = bc.value
+        vals, st, ln, table, viol = bc.value
         get = table.get
         for pdf in batches:
             ua = pdf["url_a"]
@@ -229,12 +230,8 @@ def _broadcast_score(
             if inter is None:
                 redo = range(n)
                 inter = np.zeros(n, dtype=np.int64)
-            elif bad_rows:
-                redo = [
-                    i
-                    for i in range(n)
-                    if (ia[i] in bad_rows or ib[i] in bad_rows)
-                ]
+            elif viol.size:
+                redo = np.flatnonzero(np.isin(ia, viol) | np.isin(ib, viol))
             if redo is not None:
                 for i in redo:
                     if ia[i] < 0 or ib[i] < 0:

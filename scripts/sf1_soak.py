@@ -12,7 +12,7 @@ boilerplate footer -> genuinely over-cap LSH buckets) and reports:
   - star_buckets / star_members  (must be > 0: real star-linking)
   - the CC dispatch taken, plus an EXPLICIT distributed large/small-star
     run over the same committed edges stage, equality-checked against
-    union-find on the same edge set
+    the driver labelling on the same edge set
   - planted-oracle recall on a sampled subset of truth pairs
 
 Usage:  python scripts/sf1_soak.py [--pages 1000000] [--cpus 16]
@@ -107,8 +107,8 @@ def main() -> None:
     dist_clusters, dist_iters = connected_components(all_edges)
     dist_n = dist_clusters.count()
     dist_sec = time.monotonic() - t2
-    dispatch_taken = "driver" if total_edges <= 500_000 else "distributed"
-    # equality vs the driver union-find ON THE SAME EDGES (the auto
+    dispatch_taken = "distributed" if report.cc_iterations else "driver"
+    # equality vs the driver labelling ON THE SAME EDGES (the auto
     # dispatch's other branch) — only if it fits the driver comfortably
     equal_vs_driver = None
     if total_edges <= 3_000_000:

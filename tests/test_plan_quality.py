@@ -33,6 +33,19 @@ def test_no_cartesian_product(plan_frames, name):
     assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def test_forced_verify_join_path_never_broadcasts(plan_frames):
+    """broadcast_cap_bytes=0 forces the join path; both sort-merge joins of
+    each pass carry a merge hint, so none may plan as a broadcast (an
+    unbounded pair table whose size estimate reads small)."""
+    edges = plan_frames["edges"]
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("SortMergeJoin") == 4, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    edges.collect()  # the adaptive re-plan must keep the strategy too
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_band_pairing_is_bucket_keyed_and_memory_bounded(plan_frames):
     plan = plan_frames["pairs"]._jdf.queryExecution().executedPlan().toString()
     # round-8 shape: the size/hub annotation is a spill-safe Window keyed

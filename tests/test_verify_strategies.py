@@ -77,3 +77,32 @@ def test_prefilter_k_knob_same_edges(spark, docs_and_pairs):
         for r in verified_edges(pairs, sigs, cfg64, broadcast_cap_bytes=0).collect()
     }
     assert got128 == got64 and len(got64) > 0
+
+
+def test_broadcast_redo_rows_match_join_path(spark):
+    """Unsorted or duplicate-valued signature arrays are re-scored with
+    np.intersect1d in both physical paths (the broadcast scan picks them by
+    np.isin on the violating row set); the jaccards must agree exactly."""
+    rng = random.Random(5)
+    rows = []
+    for i in range(40):
+        sig = sorted(rng.sample(range(1, 90), 60))
+        if i % 3 == 0:
+            sig = sig[::-1]  # unsorted
+        if i % 4 == 0:
+            sig = sig + sig[:2]  # duplicate values
+        rows.append((f"u{i:03d}", sig))
+    sigs = spark.createDataFrame(rows, "url string, sig array<bigint>")
+    pairs = spark.createDataFrame(
+        [(f"u{a:03d}", f"u{b:03d}") for a in range(40) for b in range(a + 1, 40)],
+        "url_a string, url_b string",
+    )
+    cfg = PipelineConfig(
+        sketch=SketchConfig(nsize=21, maxsize=256, hash_name="xxh64", seed=0),
+        jaccard_threshold=0.45,
+    )
+    via_bcast = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=1 << 40)
+    via_join = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=0)
+    b = sorted((r["url_a"], r["url_b"], r["jaccard"]) for r in via_bcast.collect())
+    j = sorted((r["url_a"], r["url_b"], r["jaccard"]) for r in via_join.collect())
+    assert b == j and len(b) > 50
