@@ -507,10 +507,10 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_clusters_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME near-dup pipeline as pipeline_clusters but through the
-    checkpoint-free flow variant (one chained Catalyst plan, persists at
-    shuffle barriers) — same operators, same config, so it shares the
-    recursive-CTE oracle verbatim. Gates that both physical forms return
-    identical clusters through the driver."""
+    checkpoint-free flow (the same stage list over lazily persisted
+    stages instead of parquet commits) — same operators, same config, so
+    it shares the recursive-CTE oracle verbatim. Gates that both stores
+    return identical clusters through the driver."""
     from mashing_pumpkins_spark.config import PipelineConfig, SketchConfig
     from mashing_pumpkins_spark.plans.pipeline import run_pipeline_flow
 

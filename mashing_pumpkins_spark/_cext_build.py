@@ -1,11 +1,13 @@
-"""Shared build-and-load helper for the self-compiled C kernels.
+"""The one build-and-load helper for the self-compiled C kernels
+(hashkernels/_hash_cext.py, operators/_jpeg_cext.py, _png_cext.py,
+_intersect_cext.py).
 
-The escape-hatch pattern proven by operators/_jpeg_cext.py (round 7) and
-hashkernels/_hash_cext.py (round 8): dependency-free C99 compiled on
-first use with the host cc into a content-addressed .so under the temp
-dir, loaded via ctypes; every fallible step (no compiler, compile error,
-load failure) returns None and the caller keeps its pure-Python path —
-behavior identical, only throughput changes."""
+Dependency-free C99 compiled on first use with the host cc into a
+content-addressed .so under the temp dir, loaded via ctypes; every
+fallible step (no compiler, compile error, load failure) returns None and
+the caller keeps its pure-Python path — behavior identical, only
+throughput changes. Each kernel has a kill switch: its environment
+variable set to "0" makes `load()` return None."""
 
 from __future__ import annotations
 
@@ -15,6 +17,8 @@ import os
 import shutil
 import subprocess
 import tempfile
+import threading
+from typing import Callable
 
 
 def find_cc() -> str | None:
@@ -55,3 +59,28 @@ def compile_and_load(source: str, tag: str) -> "ctypes.CDLL | None":
         return ctypes.CDLL(so_path)
     except OSError:
         return None
+
+
+def kernel_loader(
+    source: str, tag: str, env_var: str, bind: Callable[[ctypes.CDLL], None]
+) -> Callable[[], "ctypes.CDLL | None"]:
+    """A kernel module's ``load()``: the compiled library with ``bind``
+    (its ctypes argtypes/restype declarations) applied, or None when it is
+    unavailable or ``env_var`` is "0". Thread-safe; the outcome is cached
+    for the process lifetime, the kill switch is read on every call."""
+    lock = threading.Lock()
+    outcome: list = []  # [] = not tried yet, else [CDLL or None]
+
+    def load() -> "ctypes.CDLL | None":
+        if os.environ.get(env_var, "1") == "0":
+            return None
+        if not outcome:
+            with lock:
+                if not outcome:
+                    lib = compile_and_load(source, tag)
+                    if lib is not None:
+                        bind(lib)
+                    outcome.append(lib)
+        return outcome[0]
+
+    return load

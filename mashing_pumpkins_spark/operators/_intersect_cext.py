@@ -26,12 +26,10 @@ semantics.
 from __future__ import annotations
 
 import ctypes
-import os
-import threading
 
 import numpy as np
 
-from .._cext_build import compile_and_load
+from .._cext_build import kernel_loader
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -85,30 +83,21 @@ void intersect_count_ab(
 }
 """
 
-_lock = threading.Lock()
-_lib: "ctypes.CDLL | None | bool" = False  # False = not tried yet
+
+def _bind(lib: ctypes.CDLL) -> None:
+    p_u64 = ctypes.POINTER(ctypes.c_uint64)
+    p_i64 = ctypes.POINTER(ctypes.c_int64)
+    lib.intersect_count_indexed.argtypes = [
+        p_u64, p_i64, p_i64, p_i64, p_i64, ctypes.c_int64, p_i64,
+    ]
+    lib.intersect_count_indexed.restype = None
+    lib.intersect_count_ab.argtypes = [
+        p_u64, p_i64, p_u64, p_i64, ctypes.c_int64, p_i64,
+    ]
+    lib.intersect_count_ab.restype = None
 
 
-def load() -> "ctypes.CDLL | None":
-    global _lib
-    if os.environ.get("MP_SPARK_INTERSECT_CEXT", "1") == "0":
-        return None
-    with _lock:
-        if _lib is False:
-            lib = compile_and_load(_C_SOURCE, "intersect")
-            if lib is not None:
-                p_u64 = ctypes.POINTER(ctypes.c_uint64)
-                p_i64 = ctypes.POINTER(ctypes.c_int64)
-                lib.intersect_count_indexed.argtypes = [
-                    p_u64, p_i64, p_i64, p_i64, p_i64, ctypes.c_int64, p_i64,
-                ]
-                lib.intersect_count_indexed.restype = None
-                lib.intersect_count_ab.argtypes = [
-                    p_u64, p_i64, p_u64, p_i64, ctypes.c_int64, p_i64,
-                ]
-                lib.intersect_count_ab.restype = None
-            _lib = lib
-    return _lib
+load = kernel_loader(_C_SOURCE, "intersect", "MP_SPARK_INTERSECT_CEXT", _bind)
 
 
 def _p(arr: np.ndarray, typ):

@@ -24,12 +24,8 @@ tests/test_jpeg_cext.py.
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import shutil
-import subprocess
-import tempfile
-import threading
+
+from .._cext_build import kernel_loader
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -204,47 +200,8 @@ _ERRORS = {
     -4: "AC index overflow",
 }
 
-_lock = threading.Lock()
-_lib: object = None  # None = not tried, False = unavailable, else CDLL
 
-
-def _find_cc() -> str | None:
-    for cc in (os.environ.get("CC"), "cc", "gcc", "clang"):
-        if cc and shutil.which(cc):
-            return cc
-    return None
-
-
-def _compile() -> "ctypes.CDLL | None":
-    cc = _find_cc()
-    if cc is None:
-        return None
-    digest = hashlib.md5(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(
-        tempfile.gettempdir(), f"mp_spark_jpeg_cext_{digest}.so"
-    )
-    if not os.path.exists(so_path):
-        workdir = tempfile.mkdtemp(prefix="mp_jpeg_cext_")
-        src = os.path.join(workdir, "jpeg_cext.c")
-        tmp_so = os.path.join(workdir, "jpeg_cext.so")
-        with open(src, "w") as fh:
-            fh.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                [cc, "-O2", "-fPIC", "-shared", "-std=c99", src, "-o", tmp_so],
-                check=True,
-                capture_output=True,
-                timeout=120,
-            )
-            os.replace(tmp_so, so_path)  # atomic vs concurrent compilers
-        except (OSError, subprocess.SubprocessError):
-            return None
-        finally:
-            shutil.rmtree(workdir, ignore_errors=True)
-    try:
-        lib = ctypes.CDLL(so_path)
-    except OSError:
-        return None
+def _bind(lib: ctypes.CDLL) -> None:
     lib.mp_decode_scan_units.restype = ctypes.c_int
     lib.mp_decode_scan_units.argtypes = [
         ctypes.c_char_p, ctypes.c_long,
@@ -256,21 +213,9 @@ def _compile() -> "ctypes.CDLL | None":
         ctypes.POINTER(ctypes.c_void_p), ctypes.POINTER(ctypes.c_int64),
         ctypes.POINTER(ctypes.c_int64),
     ]
-    return lib
 
 
-def load() -> "ctypes.CDLL | None":
-    """The compiled kernel, or None when unavailable (no toolchain,
-    compile/load failure, or MP_SPARK_JPEG_CEXT=0). Thread-safe; the
-    outcome is cached for the process lifetime."""
-    global _lib
-    if os.environ.get("MP_SPARK_JPEG_CEXT", "1") == "0":
-        return None
-    if _lib is None:
-        with _lock:
-            if _lib is None:
-                _lib = _compile() or False
-    return _lib or None
+load = kernel_loader(_C_SOURCE, "jpeg_cext", "MP_SPARK_JPEG_CEXT", _bind)
 
 
 def error_message(code: int) -> str:

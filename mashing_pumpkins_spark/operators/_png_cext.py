@@ -13,12 +13,10 @@ numpy loop when unavailable. Kill switch: MP_SPARK_PNG_CEXT=0.
 from __future__ import annotations
 
 import ctypes
-import os
-import threading
 
 import numpy as np
 
-from .._cext_build import compile_and_load
+from .._cext_build import kernel_loader
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -77,26 +75,16 @@ int mp_png_defilter(const uint8_t *raw, long height, long stride, int bpp,
 }
 """
 
-_lock = threading.Lock()
-_lib: object = None  # None = not tried, False = unavailable, else CDLL
+
+def _bind(lib: ctypes.CDLL) -> None:
+    u8p = ctypes.POINTER(ctypes.c_uint8)
+    lib.mp_png_defilter.restype = ctypes.c_int
+    lib.mp_png_defilter.argtypes = [
+        u8p, ctypes.c_long, ctypes.c_long, ctypes.c_int, u8p,
+    ]
 
 
-def load() -> "ctypes.CDLL | None":
-    global _lib
-    if os.environ.get("MP_SPARK_PNG_CEXT", "1") == "0":
-        return None
-    if _lib is None:
-        with _lock:
-            if _lib is None:
-                lib = compile_and_load(_C_SOURCE, "png_cext")
-                if lib is not None:
-                    u8p = ctypes.POINTER(ctypes.c_uint8)
-                    lib.mp_png_defilter.restype = ctypes.c_int
-                    lib.mp_png_defilter.argtypes = [
-                        u8p, ctypes.c_long, ctypes.c_long, ctypes.c_int, u8p,
-                    ]
-                _lib = lib or False
-    return _lib or None
+load = kernel_loader(_C_SOURCE, "png_cext", "MP_SPARK_PNG_CEXT", _bind)
 
 
 def defilter_pass(

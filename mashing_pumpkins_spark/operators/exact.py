@@ -31,28 +31,27 @@ def content_key(text_col: str) -> F.Column:
 
 def collapse_exact_duplicates(
     docs: DataFrame, url_col: str = "url", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """docs -> (reps, exact_edges).
+) -> DataFrame:
+    """docs -> exact(kind, url, text, url_b): every doc tagged against its
+    content group's hub, the group's minimum url.
 
-    reps: one row per distinct content (the minimum url of each content
-    group), same schema as input.
-    exact_edges: (url_a, url_b, jaccard=1.0) linking every non-representative
-    duplicate to its representative (star per content group).
-    """
+    - kind='rep': one row per distinct content, (url=hub, text), url_b
+      null;
+    - kind='edge': one row per other member, (url=hub, url_b=member), text
+      null — a star per content group, url < url_b.
+
+    Hub via window min — ONE shuffle of the doc table instead of the
+    groupBy + join-back (which shuffles the full text payload twice), and
+    both kinds come out of that one pass."""
     from pyspark.sql.window import Window
 
     keyed = docs.withColumn("_ck", content_key(text_col))
-    # hub via window min — ONE shuffle of the doc table instead of the
-    # groupBy + join-back (which shuffles the full text payload twice)
-    w = Window.partitionBy("_ck")
-    with_hub = keyed.withColumn("_hub", F.min(url_col).over(w))
-    reps = with_hub.where(F.col(url_col) == F.col("_hub")).drop("_ck", "_hub")
-    exact_edges = (
-        with_hub.where(F.col(url_col) != F.col("_hub"))
-        .select(
-            F.least(url_col, "_hub").alias("url_a"),
-            F.greatest(url_col, "_hub").alias("url_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
+    hub = F.min(url_col).over(Window.partitionBy("_ck"))
+    with_hub = keyed.select(url_col, text_col, hub.alias("_hub"))
+    is_rep = F.col(url_col) == F.col("_hub")
+    return with_hub.select(
+        F.when(is_rep, "rep").otherwise("edge").alias("kind"),
+        F.col("_hub").alias("url"),
+        F.when(is_rep, F.col(text_col)).alias("text"),
+        F.when(~is_rep, F.col(url_col)).alias("url_b"),
     )
-    return reps, exact_edges

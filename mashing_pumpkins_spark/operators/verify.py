@@ -4,7 +4,7 @@ Semantics: reference FrozenSketch.jaccard_similarity
 (/root/reference/src/minhashsketch.py:709-718) — exact |A∩B|/|A∪B| over the
 two retained sets, >= tau keeps the edge.
 
-Physical strategy (two-phase, exact):
+Two passes, exact:
 1. PREFILTER on the bottom-K prefix of each signature (K =
    PipelineConfig.prefilter_k, default 64). A KMV prefix is itself a KMV
    sketch, so prefix-Jaccard estimates full-sketch Jaccard with sigma =
@@ -15,21 +15,26 @@ Physical strategy (two-phase, exact):
    that tail matter) while killing the bulk of boilerplate-driven
    candidates (observed: ~95% of candidates at web-like corpora sit far
    below tau, and at tau=0.8 the cut is 0.5). This cuts the expensive join
-   payload from k*8 bytes to K*8 bytes per side — round-2 profiling showed
-   the candidate-pair join payload, not the Jaccard UDF, dominates the
-   verify stage (1.9M candidates x 2 x k*8B through a sort-merge join).
+   payload from k*8 bytes to K*8 bytes per side.
 2. EXACT pass on survivors with the full signatures — so the final edge set
    is exactly the tau-threshold set (phase 1 is only ever a superset
-   filter; when maxsize <= 64 phase 1 IS exact and phase 2 is skipped).
+   filter).
 
-The Jaccard itself runs as an Arrow UDF doing per-pair np.intersect1d.
-Alternatives measured (round 3, 20k pairs x 64-element sorted arrays):
-per-pair intersect1d 88ms, per-pair searchsorted 168ms, batched pandas
-merge 957ms, batched one-big-lexsort and (n,64,64) equality-broadcast far
-worse — for k<=256 sorted arrays the "vectorize the batch" refactors LOSE
-to the loop; numpy call overhead per pair (~4.4us) is already below Arrow
-transfer cost. Catalyst's array_intersect is worse still: interpreted per
-element, measured 94s for 240k pairs of 1000-element arrays.
+One decision picks the physical strategy: a single aggregate over the
+signatures of the candidate urls measures the url count, the full
+signature values and the prefix values. On those actual bytes:
+- the full slice fits the broadcast cap: broadcast it and score every pair
+  in one scan, no join, no prefilter;
+- else the prefix slice fits: broadcast the prefixes for phase 1, join
+  the survivors to the signatures for phase 2;
+- else join for both passes. When no signature is longer than K (the
+  prefix values equal the full values) phase 1 would be exact, so only
+  phase 2 runs.
+
+Scoring is the C sorted-merge intersect kernel (operators/_intersect_cext)
+over a whole Arrow batch per call, with np.intersect1d for rows that are
+not sorted-unique and when the kernel is unavailable: results are
+bit-identical either way.
 """
 
 from __future__ import annotations
@@ -45,8 +50,6 @@ from pyspark.sql.types import DoubleType
 
 from ..config import PipelineConfig
 from . import _intersect_cext
-
-PREFILTER_K = 64  # default when the caller's PipelineConfig predates the knob
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 
@@ -133,29 +136,22 @@ def _join_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     return pairs.hint("merge").join(sig_a, "url_a").hint("merge").join(sig_b, "url_b")
 
 
-def _candidate_urls(pairs: DataFrame) -> DataFrame:
-    """Distinct url set appearing in any candidate pair — the build side
-    of every dispatch count/probe/collect job. Callers that run several
-    of those jobs persist it once instead of re-deriving the
-    explode+distinct per job."""
-    return pairs.select(
-        F.explode(F.array("url_a", "url_b")).alias("url")
-    ).distinct()
+def _candidate_slice(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """The signatures of the urls appearing in any candidate pair."""
+    urls = pairs.select(F.explode(F.array("url_a", "url_b")).alias("url")).distinct()
+    return sigs.join(urls, "url", "semi")
 
 
 def _collect_slice_flat(
-    pairs: DataFrame, sigs: DataFrame, urls: DataFrame | None = None
+    sl: DataFrame,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict, np.ndarray]:
-    """Candidate-url signature slice as one flat layout: semi-join sigs to
-    the urls appearing in any pair, collect ONCE via Arrow (toArrow — no
-    row-pickle path, ~10x the old toPandas dict build at a 100 MB slice),
-    and expose the Arrow ListArray's own (values, offsets) buffers as
-    (flat int64 values, starts, lens, url -> row index, violating rows).
-    The flat layout is what gets broadcast: one ndarray + a str->int dict
-    pickles far faster than a dict of 10^5 small ndarrays."""
-    if urls is None:
-        urls = _candidate_urls(pairs)
-    tbl = sigs.join(urls, "url", "semi").toArrow().combine_chunks()
+    """A candidate signature slice as one flat layout: collect ONCE via
+    Arrow (toArrow — no row-pickle path, ~10x the old toPandas dict build
+    at a 100 MB slice), and expose the Arrow ListArray's own (values,
+    offsets) buffers as (flat int64 values, starts, lens, url -> row index,
+    violating rows). The flat layout is what gets broadcast: one ndarray +
+    a str->int dict pickles far faster than a dict of 10^5 small ndarrays."""
+    tbl = sl.toArrow().combine_chunks()
     n = tbl.num_rows
     if n == 0:
         flat, starts, lens = _EMPTY_I64, _EMPTY_I64, _EMPTY_I64
@@ -183,12 +179,11 @@ def _collect_slice_flat(
 
 def _broadcast_score(
     pairs: DataFrame,
-    sigs: DataFrame,
+    sl: DataFrame,
     threshold: float,
     emit_jaccard: bool,
-    urls: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared broadcast scoring pass: the signature slice rides to every
+    """Shared broadcast scoring pass: the signature slice ``sl`` rides to every
     task as a flat buffer, the pair table streams through ONE mapInPandas
     (zero join shuffles), and each batch is scored by the C sorted-merge
     kernel (numpy per-pair fallback, bit-identical — see
@@ -203,7 +198,7 @@ def _broadcast_score(
     )
 
     spark = pairs.sparkSession
-    flat, starts, lens, idx, viol = _collect_slice_flat(pairs, sigs, urls)
+    flat, starts, lens, idx, viol = _collect_slice_flat(sl)
     bc = spark.sparkContext.broadcast((flat, starts, lens, idx, viol))
     fields = [StructField("url_a", StringType()), StructField("url_b", StringType())]
     if emit_jaccard:
@@ -262,152 +257,74 @@ def _broadcast_score(
     return pairs.select("url_a", "url_b").mapInPandas(score, out_schema)
 
 
-def _broadcast_prefilter(
-    pairs: DataFrame,
-    prefixes: DataFrame,
-    pre_tau: float,
-    urls: DataFrame | None = None,
-) -> DataFrame:
-    """Phase-1 prefilter as a broadcast scan: the bottom-K prefix slice of
-    the candidate urls is pulled to the driver and broadcast, and the pair
-    table streams through one mapInPandas — the two sort-merge joins the
-    join-shaped phase 1 pays (pairs x prefix_a, then x prefix_b) disappear.
-    Pure physical change: the survivor predicate is the same float
-    ``inter/union >= pre_tau`` the join path's _jaccard_udf computes, on
-    the same prefix arrays."""
-    return _broadcast_score(pairs, prefixes, pre_tau, emit_jaccard=False, urls=urls)
-
-
-def _broadcast_verify(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    tau: float,
-    urls: DataFrame | None = None,
-) -> DataFrame:
-    """Small-candidate-set physical strategy: semi-join signatures down to
-    the urls that appear in any pair, pull that slice to the driver (Arrow)
-    and broadcast it flat — the pair table then streams through one
-    mapInPandas with ZERO join shuffles. The analog of a broadcast hash
-    join where the build side is the candidate signature slice."""
-    return _broadcast_score(pairs, sigs, tau, emit_jaccard=True, urls=urls)
-
-
 def verified_edges(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: PipelineConfig,
-    url_col: str = "url",
     broadcast_cap_bytes: int = 160 << 20,
-    n_candidate_urls: int | None = None,
 ) -> DataFrame:
     """pairs(url_a, url_b) x signatures(url, sig) -> edges(url_a, url_b, jaccard >= tau).
 
-    Physical dispatch: when the candidate signature slice is genuinely
-    small (n_candidate_urls * maxsize * 8B <= the cap) use the broadcast
-    strategy — no shuffle at all; otherwise the two-phase prefix-prefilter
-    join path (the 10^12-scale plan). Cap rationale (round-8 re-measure):
-    the slice now collects via ONE Arrow toArrow pass into a flat buffer —
-    measured ~2 s for the 99 MB bench-corpus slice INCLUDING the semi-join
-    scan (flatten + url-index build 0.04 s, broadcast pickle 1.0 s),
-    vs ~120 s for the 320 MB row-pickle toPandas dict that set the old
-    48 MB cap — and broadcasting a flat ndarray is a single memcpy-shaped
-    pickle; executor-side cost is one mmap-read per python worker. 160 MB
-    keeps driver+worker residency bounded (32 workers x slice) while
-    letting bench-scale candidate sets take the zero-shuffle path.
-
-    ``n_candidate_urls``: upper bound on distinct urls in ``pairs`` when the
-    caller already knows it (the pipeline passes 2x the candidate-stage row
-    count from the checkpoint manifest) — avoids spending an extra Spark job
-    on a count that only picks the strategy."""
-    tau = cfg.jaccard_threshold
-    prefilter_k = getattr(cfg, "prefilter_k", PREFILTER_K)
-    sigs = signatures.select(F.col(url_col).alias("url"), "sig")
-
-    # The candidate-url set feeds up to three dispatch jobs (the count,
-    # the actual-bytes probe, the slice collect's semi-join build side) —
-    # persist it ONCE so the explode+distinct over the pair table doesn't
-    # re-run per job. Lazy: the pure-join path never materializes it, so
-    # the persist/unpersist is free there. Every eager consumer below runs
-    # before the function returns, so the unpersist is safe; the returned
-    # plan never references it.
+    The strategy (module docstring) is chosen on the bytes a broadcast of
+    the candidate slice would carry: 8 B per signature value plus the
+    int64 start and length of each row. Cap rationale (round-8
+    re-measure): the slice collects via ONE Arrow toArrow pass into a flat
+    buffer — measured ~2 s for the 99 MB bench-corpus slice INCLUDING the
+    semi-join scan (flatten + url-index build 0.04 s, broadcast pickle
+    1.0 s), vs ~120 s for the 320 MB row-pickle toPandas dict that set the
+    old 48 MB cap; executor-side cost is one mmap-read per python worker.
+    160 MB keeps driver+worker residency bounded (32 workers x slice)
+    while letting bench-scale candidate sets take the zero-shuffle path."""
     from pyspark.storagelevel import StorageLevel
 
-    urls = _candidate_urls(pairs).persist(StorageLevel.MEMORY_AND_DISK)
+    tau = cfg.jaccard_threshold
+    k = cfg.prefilter_k
+    sigs = signatures.select("url", "sig")
+    # The candidate slice feeds the dispatch aggregate and the broadcast
+    # collect: persisting it builds the url set and the semi join once
+    # (persisting only the url set makes the collect broadcast it again,
+    # one more job). On the join path nothing reads it after the
+    # aggregate, so there it costs one cache write of the slice. Both
+    # consumers run before the function returns, and the returned plan
+    # never reads it, so the unpersist is safe.
+    sl = _candidate_slice(pairs, sigs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        n_urls = n_candidate_urls if n_candidate_urls is not None else urls.count()
-        if n_urls * cfg.sketch.maxsize * 8 <= broadcast_cap_bytes:
-            return _broadcast_verify(pairs, sigs, tau, urls=urls)
-
-        if cfg.sketch.maxsize <= prefilter_k:
-            # signatures already fit the prefilter width: one exact pass
-            joined = _join_sigs(pairs.select("url_a", "url_b"), sigs)
-            return (
-                joined.withColumn(
-                    "jaccard", F.round(_jaccard_udf("sig_a", "sig_b"), 9)
-                )
-                .where(F.col("jaccard") >= tau)
-                .select("url_a", "url_b", "jaccard")
+        size = F.size("sig")
+        n, full, prefix = (
+            sl.agg(
+                F.count("*"),
+                F.coalesce(F.sum(size), F.lit(0)),
+                F.coalesce(F.sum(F.least(size, F.lit(k))), F.lit(0)),
             )
+            .first()
+        )
 
-        sigma = math.sqrt(tau * (1.0 - tau) / prefilter_k)
-        pre_tau = max(0.0, tau - 6.0 * sigma)
-        prefixes = sigs.select("url", F.slice("sig", 1, prefilter_k).alias("sig"))
-        # Phase-1 physical dispatch (round 8): the PREFIX slice is
-        # prefilter_k/maxsize the size of the full-signature slice, so it
-        # often fits the broadcast cap when the full slice does not. The
-        # n_candidate_urls manifest bound counts every pair endpoint
-        # twice-plus (dup pairs share urls), so when the bound alone fails
-        # the cap, spend ONE cheap count job on the narrow pair table to
-        # get the actual url count — it routinely unlocks a zero-shuffle
-        # phase 1 that replaces two sort-merge joins of the pair x prefix
-        # tables (and, when the actual count shows even the FULL slice
-        # fits, the single-pass broadcast verify).
-        n_act = n_urls
-        if (
-            n_act * prefilter_k * 8 > broadcast_cap_bytes
-            and n_candidate_urls is not None
-        ):
-            n_act = urls.count()
-            if n_act * cfg.sketch.maxsize * 8 <= broadcast_cap_bytes:
-                # the bound was pessimistic: the full-signature slice fits
-                # after all — one zero-shuffle pass, no prefilter phase
-                return _broadcast_verify(pairs, sigs, tau, urls=urls)
-        if n_act * prefilter_k * 8 <= broadcast_cap_bytes:
-            # Actual-bytes probe (round 8): maxsize is a config CAP, not
-            # the real row width — untruncated oracle configs carry
-            # maxsize 2^30 while the real candidate slice is a few MB, and
-            # the maxsize bound above then forces the two-phase path whose
-            # exact phase sort-merge-joins the full signature table twice.
-            # The candidate url set is already small enough to broadcast
-            # ITS PREFIXES, so one tiny aggregate over the semi-joined
-            # slice (same scan the prefix collect pays anyway) measures
-            # the true bytes; when they fit the cap, verify is ONE
-            # zero-shuffle broadcast pass and the prefilter phase
-            # disappears. Never fires at production configs: there
-            # maxsize*8*n_act is the tight bound already checked.
-            if n_act * cfg.sketch.maxsize * 8 > broadcast_cap_bytes:
-                actual = (
-                    sigs.join(urls, "url", "semi")
-                    .agg(
-                        F.coalesce(F.sum(F.size("sig")), F.lit(0)).alias("s")
-                    )
-                    .first()["s"]
-                )
-                if int(actual) * 8 <= broadcast_cap_bytes:
-                    return _broadcast_verify(pairs, sigs, tau, urls=urls)
-            survivors = _broadcast_prefilter(pairs, prefixes, pre_tau, urls=urls)
+        def fits(n_values: int) -> bool:
+            return 8 * (n_values + 2 * n) <= broadcast_cap_bytes
+
+        if fits(full):
+            return _broadcast_score(pairs, sl, tau, emit_jaccard=True)
+        if prefix == full:
+            survivors = pairs.select("url_a", "url_b")
         else:
-            pre = _join_sigs(pairs.select("url_a", "url_b"), prefixes)
-            survivors = (
-                pre.withColumn("pj", _jaccard_udf("sig_a", "sig_b"))
-                .where(F.col("pj") >= pre_tau)
-                .select("url_a", "url_b")
-            )
-        exact = _join_sigs(survivors, sigs)
+            sigma = math.sqrt(tau * (1.0 - tau) / k)
+            pre_tau = max(0.0, tau - 6.0 * sigma)
+            prefix_sig = F.slice("sig", 1, k).alias("sig")
+            if fits(prefix):
+                survivors = _broadcast_score(
+                    pairs, sl.select("url", prefix_sig), pre_tau, emit_jaccard=False
+                )
+            else:
+                survivors = (
+                    _join_sigs(pairs.select("url_a", "url_b"), sigs.select("url", prefix_sig))
+                    .where(_jaccard_udf("sig_a", "sig_b") >= pre_tau)
+                    .select("url_a", "url_b")
+                )
         return (
-            exact.withColumn("jaccard", F.round(_jaccard_udf("sig_a", "sig_b"), 9))
+            _join_sigs(survivors, sigs)
+            .withColumn("jaccard", F.round(_jaccard_udf("sig_a", "sig_b"), 9))
             .where(F.col("jaccard") >= tau)
             .select("url_a", "url_b", "jaccard")
         )
     finally:
-        urls.unpersist()
+        sl.unpersist()

@@ -12,6 +12,11 @@ gives snapshot ids and atomic commits for free); this store implements the
 same contract over plain parquet so the sandbox (no Iceberg runtime jar)
 exercises identical resume logic. The interface is storage-agnostic on
 purpose.
+
+`PersistStore` meets the same `get_or_compute` contract without commits:
+each stage is a lazily persisted frame (no resume, nothing written), the
+store the checkpoint-free flow runs the pipeline over. `release()` drops
+every frame it persisted.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class StageResult:
     name: str
-    rows: int
+    rows: int | None  # None: the store did not count the stage
     wall_sec: float
     partition_counts: list[int]
     skipped: bool
@@ -132,3 +137,29 @@ class ParquetCheckpointStore:
                 ),
             )
         return self.write(spark, stage, compute())
+
+
+class PersistStore:
+    """Stages as lazily persisted frames: a stage is computed by the first
+    job that needs it and read from memory/disk by every later consumer
+    (signatures feed banding and verify; bands feed the bucket-size
+    aggregate and both self-join sides). Counting a stage would cost a job,
+    so results carry ``rows=None`` and no partition counts."""
+
+    def __init__(self):
+        self._frames: list[DataFrame] = []
+
+    def get_or_compute(
+        self, spark: SparkSession, stage: str, compute
+    ) -> tuple[DataFrame, StageResult]:
+        from pyspark.storagelevel import StorageLevel
+
+        t0 = time.monotonic()
+        df = compute().persist(StorageLevel.MEMORY_AND_DISK)
+        self._frames.append(df)
+        return df, StageResult(stage, None, time.monotonic() - t0, [], skipped=False)
+
+    def release(self) -> None:
+        for df in self._frames:
+            df.unpersist()
+        self._frames.clear()

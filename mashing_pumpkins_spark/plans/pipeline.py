@@ -3,9 +3,13 @@
     pages -> extract -> exact-dup collapse -> sketch -> bands
           -> candidates (skew-aware) -> verify -> cluster
 
-Every stage is committed to the checkpoint store before the next starts, so
-a rerun with the same config resumes after the last committed stage. Stage
-metrics (rows, wall sec, per-partition counts) come back in the run report.
+One stage list, two stores. `run_pipeline` hands each stage to a store's
+`get_or_compute`: the parquet checkpoint store commits every stage before
+the next starts, so a rerun with the same config resumes after the last
+committed stage, and its stage metrics (rows, wall sec, per-partition
+counts) come back in the run report. `run_pipeline_flow` runs the same
+stages over a `PersistStore` (lazily persisted frames, nothing written)
+and releases them before it returns.
 """
 
 from __future__ import annotations
@@ -20,55 +24,40 @@ from ..operators.connected_components import connected_components_auto
 from ..operators.exact import collapse_exact_duplicates
 from ..operators.signature import sketch_table
 from ..operators.verify import verified_edges
-from .checkpoint import ParquetCheckpointStore, StageResult
+from .checkpoint import ParquetCheckpointStore, PersistStore, StageResult
 
 
 class RunReport:
     """Stage metrics for one pipeline run.
 
     ``star_buckets`` / ``star_members`` (the over-cap skew lineage) are
-    LAZY: reading them runs one small aggregate over the committed band
-    table on FIRST access (guide §1.2: don't spend a full band-table pass
-    on numbers the caller may never read — the bench path reads only the
-    clusters). Access them while the checkpoint store is still alive;
-    values are cached after the first read."""
+    LAZY: reading them runs one small aggregate over the band table on
+    FIRST access (guide §1.2: don't spend a full band-table pass on numbers
+    the caller may never read — the bench path reads only the clusters).
+    Access them while the store is still alive; values are cached after the
+    first read. They read None when nothing measured them: the candidates
+    stage was resumed from a snapshot, or the run was a flow, whose stages
+    are released before the report is returned."""
 
-    def __init__(
-        self,
-        stages: list[StageResult] | None = None,
-        cc_iterations: int = 0,
-        star_buckets: int = 0,
-        star_members: int = 0,
-    ):
-        self.stages = stages if stages is not None else []
-        self.cc_iterations = cc_iterations
-        self._stars = (star_buckets, star_members)
+    def __init__(self):
+        self.stages: list[StageResult] = []
+        self.cc_iterations = 0
+        self._stars: tuple[int, int] | None = None
         self._star_thunk = None
 
-    def _force_stars(self) -> None:
+    def _star(self, i: int) -> int | None:
         if self._star_thunk is not None:
             thunk, self._star_thunk = self._star_thunk, None
             self._stars = thunk()
+        return None if self._stars is None else self._stars[i]
 
     @property
-    def star_buckets(self) -> int:
-        self._force_stars()
-        return self._stars[0]
-
-    @star_buckets.setter
-    def star_buckets(self, v: int) -> None:
-        self._force_stars()
-        self._stars = (int(v), self._stars[1])
+    def star_buckets(self) -> int | None:
+        return self._star(0)
 
     @property
-    def star_members(self) -> int:
-        self._force_stars()
-        return self._stars[1]
-
-    @star_members.setter
-    def star_members(self, v: int) -> None:
-        self._force_stars()
-        self._stars = (self._stars[0], int(v))
+    def star_members(self) -> int | None:
+        return self._star(1)
 
     def to_dict(self) -> dict:
         return {
@@ -131,9 +120,9 @@ def run_pipeline(
     """Returns (clusters(url, cluster_id), report). Only docs that belong to
     some near-duplicate cluster appear; all other urls are singletons.
 
-    Stage storage is pluggable (round-4): pass ``store`` (anything with
-    the CheckpointStore contract — get_or_compute/has/read/manifest, e.g.
-    plans.iceberg.IcebergCheckpointStore) to commit stages to a catalog
+    Stage storage is pluggable: pass ``store`` (anything with
+    ``get_or_compute(spark, name, compute) -> (df, StageResult)``, e.g.
+    plans.iceberg.IcebergCheckpointStore or checkpoint.PersistStore)
     instead of the default parquet store built from ``checkpoint_dir``;
     the Iceberg integration test runs this whole pipeline against an
     Iceberg catalog whenever the runtime jar is present."""
@@ -150,16 +139,8 @@ def run_pipeline(
 
     docs = stage("extract", lambda: extract(pages, cfg))
 
-    reps_and_edges = stage(
-        "exact",
-        lambda: _exact_stage(docs),
-    )
-    reps = reps_and_edges.where(F.col("kind") == "rep").select("url", "text")
-    exact_edges = reps_and_edges.where(F.col("kind") == "edge").select(
-        F.col("url").alias("url_a"), F.col("url_b"), F.lit(1.0).alias("jaccard")
-    )
-
-    signatures = stage("signatures", lambda: _sketch_stage(reps, cfg))
+    exact = stage("exact", lambda: collapse_exact_duplicates(docs))
+    signatures = stage("signatures", lambda: _sketch_stage(exact, cfg))
     bands = stage("bands", lambda: band_table(signatures, cfg))
 
     def _candidates():
@@ -176,17 +157,9 @@ def run_pipeline(
         return pairs
 
     pairs = stage("candidates", _candidates)
-    # the candidates stage row count is already in the manifest — hand the
-    # verify dispatch its url bound instead of spending a count job
-    n_pair_rows = report.stages[-1].rows
-    near_edges = stage(
-        "edges",
-        lambda: verified_edges(
-            pairs, signatures, cfg, n_candidate_urls=2 * n_pair_rows
-        ),
-    )
+    near_edges = stage("edges", lambda: verified_edges(pairs, signatures, cfg))
     all_edges = near_edges.select("url_a", "url_b").union(
-        exact_edges.select("url_a", "url_b")
+        exact.where(F.col("kind") == "edge").select(F.col("url").alias("url_a"), "url_b")
     )
 
     def _cluster():
@@ -201,86 +174,43 @@ def run_pipeline(
 def run_pipeline_flow(
     spark: SparkSession, pages: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, RunReport]:
-    """Checkpoint-free variant: one chained Catalyst plan from pages to
-    edges (barriers only at shuffles), then clustering. Used for throughput
-    /scaling measurement where per-stage materialization would swamp the
-    signal at sandbox scale; production runs use run_pipeline (checkpointed)
-    where stage compute dwarfs commit cost. Same operators, same results.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    report = RunReport()
-    par = spark.sparkContext.defaultParallelism * 4
-    docs = extract(pages, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    reps, exact_edges = collapse_exact_duplicates(docs)
-    exact_edges = exact_edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # Partitioning note: AQE's byte-based coalescing sizes partitions for
-    # IO, but the sketch/band stages are Python-UDF CPU-bound — a "small"
-    # 45MB input is minutes of kernel work. Repartition by row count so
-    # every core gets UDF work (at 100TB the byte heuristic and the CPU
-    # heuristic agree; at sandbox scale they diverge wildly).
-    reps = reps.repartition(par)
-    # signatures feed BOTH the banding branch and the two verify joins;
-    # bands feed the bucket-size agg and both self-join sides — without
-    # persists Catalyst recomputes the UDF stages once per consumer
-    signatures = _sketch_stage(reps, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = band_table(signatures, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    pairs, _skew = candidate_pairs(bands, cfg)
-    # pairs feed THREE verify consumers (the strategy-dispatch url count,
-    # the candidate-url slice, and the scoring scan) — without a persist
-    # the window + pairing chain recomputes per consumer (round-8 profile:
-    # verify dominated the flow wall 5.4 s of 9, ~half of it recompute)
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    near_edges = verified_edges(pairs, signatures, cfg).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    all_edges = near_edges.select("url_a", "url_b").union(
-        exact_edges.select("url_a", "url_b")
-    )
-    clusters, iters = connected_components_auto(all_edges)
-    report.cc_iterations = iters
+    """Checkpoint-free run: the same stages over a PersistStore, so nothing
+    is committed and every stage a later one reads twice is computed once.
+    Used where per-stage commits would swamp the signal (throughput and
+    scaling runs, intra-batch dedup); production runs use run_pipeline
+    with a checkpoint store. The persisted stages are released before
+    returning: both clustering paths return frames that no longer read
+    them (a driver-built table, or local checkpoints the convergence test
+    has already materialized). Stage rows are not counted, and the
+    report's skew lineage reads None."""
+    store = PersistStore()
+    try:
+        clusters, report = run_pipeline(spark, pages, cfg, store=store)
+    finally:
+        store.release()
+    report._star_thunk = None
     return clusters, report
 
 
-def _sketch_stage(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """sketch_table, or its sharded variant when the config bounds per-task
-    input bytes (outlier 100MB+ pages: same sketch bit-for-bit, bounded
-    Arrow batches).
+def _sketch_stage(exact: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """sketch_table over the exact stage's representatives, or its sharded
+    variant when the config bounds per-task input bytes (outlier 100MB+
+    pages: same sketch bit-for-bit, bounded Arrow batches).
 
-    Partitioning: parquet re-reads plan splits by BYTES (maxPartitionBytes
-    file packing), but the sketch UDF is CPU-bound per byte — a checkpoint
-    snapshot that packs into fewer splits than cores would underparallelize
-    the most expensive stage. Repartition up only when that happens; at
+    Partitioning: the sketch UDF is CPU-bound per byte, so it gets at
+    least 2 x defaultParallelism tasks. A snapshot re-read plans its
+    splits by BYTES (maxPartitionBytes file packing) without running a
+    job, and is repartitioned only when it has fewer splits than that; at
     production scale snapshots have thousands of splits and this is a
-    no-op (split planning only, no job)."""
+    no-op. A persisted stage has no split count until adaptive execution
+    has run its shuffles (asking for it runs them as jobs, and reports the
+    pre-coalesce count), so it is always repartitioned."""
+    reps = exact.where(F.col("kind") == "rep").select("url", "text")
     par = reps.sparkSession.sparkContext.defaultParallelism * 2
-    if reps.rdd.getNumPartitions() < par:
+    if exact.is_cached or reps.rdd.getNumPartitions() < par:
         reps = reps.repartition(par)
     if cfg.shard_chunk_bytes > 0:
         from ..operators.sharding import sketch_table_sharded
 
         return sketch_table_sharded(reps, cfg.sketch, cfg.shard_chunk_bytes)
     return sketch_table(reps, cfg.sketch)
-
-
-def _exact_stage(docs: DataFrame) -> DataFrame:
-    """Single-parquet encoding of (reps ∪ exact edges) so the exact stage is
-    one checkpointed snapshot, with a self-describing schema: kind='rep'
-    rows carry (url, text) and a null url_b; kind='edge' rows carry
-    (url=url_a, url_b) and a null text. (Round 2 smuggled edge urls through
-    the text column; anyone reading the checkpoint parquet had to know the
-    pun — now the columns mean what they say.)"""
-    reps, exact_edges = collapse_exact_duplicates(docs)
-    rep_rows = reps.select(
-        F.lit("rep").alias("kind"),
-        F.col("url"),
-        F.col("text"),
-        F.lit(None).cast("string").alias("url_b"),
-    )
-    edge_rows = exact_edges.select(
-        F.lit("edge").alias("kind"),
-        F.col("url_a").alias("url"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("url_b"),
-    )
-    return rep_rows.union(edge_rows)

@@ -101,10 +101,7 @@ def main() -> None:
             (pa, pb) if pa < pb else (pb, pa)
             for pa, pb in pairs.select("url_a", "url_b").collect()
         }
-        n_urls = 2 * len(cand)
-        edges = verified_edges(
-            pairs, signatures, cfg, n_candidate_urls=max(n_urls, 1)
-        )
+        edges = verified_edges(pairs, signatures, cfg)
         edge = {
             (pa, pb) if pa < pb else (pb, pa)
             for pa, pb in edges.select("url_a", "url_b").collect()

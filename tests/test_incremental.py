@@ -51,6 +51,24 @@ def test_incremental_admission_splits_matches_and_fresh(spark):
     assert sorted(r.url for r in fresh.collect()) == ["b2", "b4"]  # b3 collapsed
 
 
+def test_incremental_leaves_no_persisted_rdds(spark):
+    """The intra-batch flow releases what it persisted: after admitting a
+    batch (driver-path clustering) and reading both outputs, no cached RDD
+    is left behind."""
+    cfg = _cfg()
+    committed = _corpus(spark, [(f"c{i}", _doc(f"c{i}")) for i in range(3)])
+    sigs, bands = index_tables(committed, cfg)
+    batch = _corpus(
+        spark,
+        [("b1", _doc("bx")), ("b2", _doc("bx").replace("bxw59", "x")), ("b3", _doc("c1"))],
+    )
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    matches, fresh = incremental_near_dup(batch, sigs, bands, cfg)
+    assert [(r.new_url, r.match_url) for r in matches.collect()] == [("b3", "c1")]
+    assert sorted(r.url for r in fresh.collect()) == ["b1"]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_incremental_index_delta_appends_cleanly(spark):
     cfg = _cfg()
     committed = _corpus(spark, [(f"c{i}", _doc(f"c{i}")) for i in range(3)])

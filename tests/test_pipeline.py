@@ -151,6 +151,64 @@ def test_flow_mode_matches_checkpointed(spark, corpus, tmp_path_factory):
     assert a1 == a2
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_flow_releases_its_persisted_stages(spark, corpus):
+    """The flow persists its stages and releases them before returning:
+    on a driver-path corpus no cached RDD outlives the call, the returned
+    clusters still read, and the report neither counts stages nor holds a
+    lazy aggregate over the released stages."""
+    pages_pd, _ = corpus
+    pages = spark.createDataFrame(pages_pd.head(200))
+    before = _persistent_rdd_ids(spark)
+    clusters, report = run_pipeline_flow(spark, pages, CFG)
+    assert report.cc_iterations == 0  # the driver clustering path
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert clusters.count() > 0
+    d = report.to_dict()
+    assert [s["name"] for s in d["stages"]] == [
+        "extract", "exact", "signatures", "bands", "candidates", "edges", "clusters"
+    ]
+    assert all(s["rows"] is None for s in d["stages"])
+    assert d["star_buckets"] is None and d["star_members"] is None
+
+
+def test_sketch_stage_partitions_without_a_job(spark, corpus, tmp_path):
+    """The sketch stage sizes its input without running a job: a persisted
+    exact stage is always repartitioned to 2 x defaultParallelism, and a
+    snapshot is repartitioned only when it plans fewer splits than that."""
+    from mashing_pumpkins_spark.operators.exact import collapse_exact_duplicates
+    from mashing_pumpkins_spark.plans.pipeline import _sketch_stage
+
+    sc = spark.sparkContext
+    par = 2 * sc.defaultParallelism
+    pages_pd, _ = corpus
+    exact = collapse_exact_duplicates(spark.createDataFrame(pages_pd.head(100)))
+    exact.repartition(par).write.parquet(str(tmp_path / "exact"))
+    snapshot = spark.read.parquet(str(tmp_path / "exact"))
+    persisted = exact.persist()
+    group = "sketch_stage_planning"
+    sc.setJobGroup(group, group)
+    try:
+        from_cache = _sketch_stage(persisted, CFG)
+        from_snapshot = _sketch_stage(snapshot, CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        persisted.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert f"Repartition {par}, true" in plan(from_cache)
+    splits = snapshot.where(F.col("kind") == "rep").rdd.getNumPartitions()
+    assert ("Repartition" in plan(from_snapshot)) == (splits < par)
+
+
 def test_pipeline_resume_skips_committed_stages(spark, corpus, tmp_path_factory):
     pages_pd, _ = corpus
     pages = spark.createDataFrame(pages_pd.head(200))
@@ -164,6 +222,8 @@ def test_pipeline_resume_skips_committed_stages(spark, corpus, tmp_path_factory)
     out2 = sorted((r["url"], r["cluster_id"]) for r in clusters2.collect())
     assert all(s.skipped for s in report2.stages)
     assert out1 == out2
+    # a resumed candidates stage measured no skew: None, not a made-up 0
+    assert report2.star_buckets is None and report2.star_members is None
 
     # kill-after-stage-commit simulation: drop the last two stages, rerun —
     # earlier stages stay committed, later ones recompute, output identical

@@ -1,6 +1,7 @@
-"""verified_edges physical strategies must agree: broadcast-dict (small
-slice), two-phase prefix-prefilter join (maxsize > 256), single-phase join
-(maxsize <= 256)."""
+"""verified_edges physical strategies must agree: broadcast of the full
+signatures, broadcast prefix prefilter then a join for the exact pass, and
+a join for both passes (one pass when no signature is longer than the
+prefix)."""
 
 from __future__ import annotations
 
@@ -35,21 +36,50 @@ def docs_and_pairs(spark):
     return docs, pairs
 
 
+def _exact_edges(sigs, pairs, tau):
+    """Driver-side exact Jaccard over the collected signatures."""
+    sig = {r["url"]: set(r["sig"]) for r in sigs.collect()}
+    out = {}
+    for r in pairs.collect():
+        a, b = sig[r["url_a"]], sig[r["url_b"]]
+        j = len(a & b) / len(a | b)
+        if j >= tau:
+            out[(r["url_a"], r["url_b"])] = j
+    return out
+
+
+def _verify_strategy(edges) -> str:
+    plan = edges._jdf.queryExecution().optimizedPlan().toString()
+    broadcast, joined = "MapInPandas" in plan, "ArrowEvalPython" in plan
+    if broadcast:
+        return "prefix_broadcast" if joined else "broadcast"
+    return "join"
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "prefix_broadcast", "join"])
 @pytest.mark.parametrize("maxsize", [256, 1000])
-def test_broadcast_and_join_paths_agree(spark, docs_and_pairs, maxsize):
+def test_broadcast_and_join_paths_agree(spark, docs_and_pairs, maxsize, strategy):
+    """Each strategy, forced by a cap set from the fixture's measured slice
+    bytes (8 B per value plus a start and a length per row; every url is a
+    candidate), returns exactly the driver-side exact-Jaccard edges."""
     docs, pairs = docs_and_pairs
     cfg = PipelineConfig(
         sketch=SketchConfig(nsize=21, maxsize=maxsize, hash_name="xxh64", seed=0),
         jaccard_threshold=0.5,
     )
     sigs = sketch_table(docs, cfg.sketch)
-    via_bcast = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=1 << 40)
-    via_join = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=0)
-    b = sorted((r["url_a"], r["url_b"], round(r["jaccard"], 9)) for r in via_bcast.collect())
-    j = sorted((r["url_a"], r["url_b"], round(r["jaccard"], 9)) for r in via_join.collect())
-    assert b == j
-    assert len(b) > 5  # fixture actually plants verifiable pairs
-    assert all(x[2] >= 0.5 for x in b)
+    lens = [len(r["sig"]) for r in sigs.collect()]
+    prefix_bytes = 8 * (sum(min(n, cfg.prefilter_k) for n in lens) + 2 * len(lens))
+    full_bytes = 8 * (sum(lens) + 2 * len(lens))
+    assert prefix_bytes < full_bytes
+    cap = {"broadcast": full_bytes, "prefix_broadcast": prefix_bytes, "join": 0}[strategy]
+    edges = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=cap)
+    assert _verify_strategy(edges) == strategy
+    got = {(r["url_a"], r["url_b"]): r["jaccard"] for r in edges.collect()}
+    want = _exact_edges(sigs, pairs, 0.5)
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) < 1e-9 for k in want)
+    assert len(got) > 5  # fixture actually plants verifiable pairs
 
 
 def test_prefilter_k_knob_same_edges(spark, docs_and_pairs):
@@ -106,3 +136,45 @@ def test_broadcast_redo_rows_match_join_path(spark):
     b = sorted((r["url_a"], r["url_b"], r["jaccard"]) for r in via_bcast.collect())
     j = sorted((r["url_a"], r["url_b"], r["jaccard"]) for r in via_join.collect())
     assert b == j and len(b) > 50
+
+
+def _queries_in_group(spark, group: str) -> list[str]:
+    """Physical plans of the SQL queries whose jobs ran in ``group``, in
+    execution order. A query runs as several jobs under adaptive execution
+    (one per shuffle stage), so queries, not jobs, count the eager steps."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = list(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if any(e.jobs().contains(j) for j in job_ids):
+            plans.append((e.executionId(), e.physicalPlanDescription()))
+    return [p for _, p in sorted(plans)]
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_verify_dispatch_is_one_aggregate(spark, docs_and_pairs, broadcast):
+    """Choosing the strategy costs exactly one query, the aggregate over
+    the candidate slice. The broadcast path adds only the slice collect;
+    the join path adds nothing eager. A return to separate count or probe
+    jobs fails."""
+    docs, pairs = docs_and_pairs
+    cfg = PipelineConfig(
+        sketch=SketchConfig(nsize=21, maxsize=1000, hash_name="xxh64", seed=0),
+        jaccard_threshold=0.5,
+    )
+    sigs = sketch_table(docs, cfg.sketch).localCheckpoint()
+    pairs.collect()  # any set-up job of the inputs happens outside the group
+    group = f"verify_dispatch_{broadcast}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=(1 << 40) if broadcast else 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plans = _queries_in_group(spark, group)
+    assert len(plans) == (2 if broadcast else 1)
+    assert "least(size(sig" in plans[0]  # the dispatch aggregate comes first
