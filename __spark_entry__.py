@@ -50,11 +50,11 @@ def q_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding (hex-window shingling) — a full value oracle of the sketch
     cardinality semantics, byte-exact on non-ASCII text too."""
     from mashing_pumpkins_spark.config import SketchConfig
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     cfg = SketchConfig(nsize=21, maxsize=64, hash_name="xxh64", seed=0)
     return (
-        with_signature(_docs(spark, sf_dir).select("doc_id", "text"), cfg)
+        sketch_table(_docs(spark, sf_dir), cfg, url_col="doc_id")
         .select(
             "doc_id",
             F.size("sig").alias("sig_size"),
@@ -72,11 +72,11 @@ def q_sketch_stats_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     nvisited oracle transfers verbatim — a full value oracle covering the
     minmax='max' engine path end-to-end."""
     from mashing_pumpkins_spark.config import SketchConfig
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     cfg = SketchConfig(nsize=21, maxsize=64, hash_name="xxh64", seed=0, minmax="max")
     return (
-        with_signature(_docs(spark, sf_dir).select("doc_id", "text"), cfg)
+        sketch_table(_docs(spark, sf_dir), cfg, url_col="doc_id")
         .select(
             "doc_id",
             F.size("sig").alias("sig_size"),
@@ -91,11 +91,11 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     small for the hash check); values depend on xxh64 -> rows-only oracle
     (bit-compat is pinned against the reference C in tests/)."""
     from mashing_pumpkins_spark.config import SketchConfig
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     cfg = SketchConfig(nsize=21, maxsize=8, hash_name="xxh64", seed=0)
     return (
-        with_signature(_docs(spark, sf_dir).select("doc_id", "text"), cfg)
+        sketch_table(_docs(spark, sf_dir), cfg, url_col="doc_id")
         .select("doc_id", F.posexplode("sig").alias("pos", "hash_i64"))
         .orderBy("doc_id", "pos")
     )
@@ -157,12 +157,12 @@ def q_resketch_union_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     union — a full SQL value oracle for the hash-ingestion path."""
     from mashing_pumpkins_spark.config import SketchConfig
     from mashing_pumpkins_spark.functions.estimators import add_hashvalues
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     cfg = SketchConfig(nsize=21, maxsize=1 << 30, hash_name="xxh64", seed=0)
-    sigs = with_signature(
-        _docs(spark, sf_dir).select("doc_id", "text"), cfg
-    ).select("doc_id", "sig")
+    sigs = sketch_table(_docs(spark, sf_dir), cfg, url_col="doc_id").select(
+        "doc_id", "sig"
+    )
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(
         (F.col("doc_id") - 1).alias("id_a"),
@@ -249,12 +249,12 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mashing_pumpkins_spark.config import SketchConfig
     from mashing_pumpkins_spark.functions.estimators import jaccard_similarity
     from mashing_pumpkins_spark.operators.dedup import shingle_jaccard_pairs
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     docs = _docs(spark, sf_dir)
     exact_pairs = shingle_jaccard_pairs(docs, threshold=0.8, exact=True)
     cfg = SketchConfig(nsize=21, maxsize=256, hash_name="xxh64", seed=0)
-    sigs = with_signature(docs.select("doc_id", "text"), cfg).select("doc_id", "sig")
+    sigs = sketch_table(docs, cfg, url_col="doc_id").select("doc_id", "sig")
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = jaccard_similarity(F.col("sig_a"), F.col("sig_b"))
@@ -277,53 +277,30 @@ def q_similarity_estimators(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O21/O22/O23: jaccard + containment + dice on near-dup pairs through
     the un-truncated sketch path — full SQL value oracle."""
     from mashing_pumpkins_spark.config import SketchConfig
-    from mashing_pumpkins_spark.functions.estimators import (
-        dice_similarity,
-        jaccard_containment,
-        jaccard_similarity,
-    )
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.dedup import sketch_overlap_pairs
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     cfg = SketchConfig(nsize=21, maxsize=1 << 30, hash_name="xxh64", seed=0)
-    sigs = with_signature(
-        _docs(spark, sf_dir).select("doc_id", "text"), cfg
-    ).select("doc_id", "sig")
-    # round-8 plan change, value-identical output: every estimator here is a
-    # function of (|A∩B|, |A|, |B|) alone, and any pair at jaccard >= 0.8
-    # shares hashes, so the n^2/2 crossJoin + per-pair array_intersect is
-    # replaced by an equi-join on exploded (id, hash) rows — |A∩B| is the
-    # matched-hash count, |A|/|B| are the signature sizes. Same integers,
-    # same double division and round() as jaccard_similarity /
-    # jaccard_containment / dice_similarity (functions/estimators.py); the
-    # full SQL value oracle pins the equality.
-    _ = (jaccard_similarity, jaccard_containment, dice_similarity)  # semantics source
-    ex = sigs.select("doc_id", F.explode("sig").alias("_h"))
-    sizes = sigs.select("doc_id", F.size("sig").alias("_sz"))
-    a = ex.select(F.col("doc_id").alias("id_a"), "_h")
-    b = ex.select(F.col("doc_id").alias("id_b"), "_h")
-    inter = (
-        a.join(b, "_h")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_i"))
-    )
-    sza = sizes.select(F.col("doc_id").alias("id_a"), F.col("_sz").alias("_sza"))
-    szb = sizes.select(F.col("doc_id").alias("id_b"), F.col("_sz").alias("_szb"))
-    i_d = F.col("_i").cast("double")
-    union_d = (F.col("_sza") + F.col("_szb") - F.col("_i")).cast("double")
+    sigs = sketch_table(_docs(spark, sf_dir), cfg, url_col="doc_id")
+    # every estimator here is a function of (|A∩B|, |A|, |B|) alone, so the
+    # pairs come from the exploded-hash equi-join shingle_jaccard_pairs
+    # uses. Same integers, same double division and round() as
+    # jaccard_similarity / jaccard_containment / dice_similarity
+    # (functions/estimators.py); the full SQL value oracle pins the equality.
+    i_d = F.col("inter").cast("double")
+    union_d = (F.col("size_a") + F.col("size_b") - F.col("inter")).cast("double")
     return (
-        inter.join(sza, "id_a")
-        .join(szb, "id_b")
+        sketch_overlap_pairs(sigs)
         .withColumn("jaccard", F.round(i_d / union_d, 6))
         .where(F.col("jaccard") >= 0.8)
         .select(
             "id_a",
             "id_b",
             "jaccard",
-            F.round(i_d / F.col("_sza").cast("double"), 6).alias("containment"),
+            F.round(i_d / F.col("size_a").cast("double"), 6).alias("containment"),
             F.round(
-                (F.col("_i") * 2).cast("double")
-                / (F.col("_sza") + F.col("_szb")).cast("double"),
+                (F.col("inter") * 2).cast("double")
+                / (F.col("size_a") + F.col("size_b")).cast("double"),
                 6,
             ).alias("dice"),
         )
@@ -485,7 +462,7 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mashing_pumpkins_spark.operators.cluster_report import (
         cluster_quality_report,
     )
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
     from mashing_pumpkins_spark.plans.pipeline import run_pipeline
 
     cfg = PipelineConfig(
@@ -501,7 +478,7 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, _ = run_pipeline(
         spark, pages, cfg, _tmpdir("mp_spark_cq_")
     )
-    sigs = with_signature(pages, cfg.sketch, "text").select("url", "sig")
+    sigs = sketch_table(pages, cfg.sketch).select("url", "sig")
     return cluster_quality_report(clusters, sigs)
 
 

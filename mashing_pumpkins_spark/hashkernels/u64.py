@@ -34,12 +34,3 @@ def py_u64_to_i64(value: int) -> int:
 def py_i64_to_u64(value: int) -> int:
     return value & MASK64
 
-
-def unsigned_sort_key_sql(col: str) -> str:
-    """SQL expression mapping a bigint holding a uint64 bit pattern onto a
-    signed value with the same ordering as the unsigned interpretation.
-
-    ``x ^ BIGINT_MIN`` flips the sign bit: values >= 2^63 (negative as
-    bigint) become positive-ordered after all values < 2^63.
-    """
-    return f"({col} ^ -9223372036854775808)"

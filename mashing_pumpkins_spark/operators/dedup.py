@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..config import SketchConfig
 from ..functions.estimators import jaccard_similarity
 from ..functions.textstats import doc_fingerprint
-from ..operators.signature import with_signature
+from ..operators.signature import sketch_table
 
 
 def exact_fingerprint_groups(
@@ -45,6 +45,35 @@ def normalized_fingerprint_dedup(
     return keep.select(id_col, "fp")
 
 
+def sketch_overlap_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b) for every pair id_a < id_b of
+    `sigs(id_col, sig)` rows that share at least one hash: `inter` is
+    |A∩B|, `size_a`/`size_b` the signature sizes.
+
+    Plan: an equi-join on exploded (id, hash) rows, a pair count, then two
+    size joins. Every set estimator is a function of (|A∩B|, |A|, |B|)
+    alone, and any pair above a positive threshold shares a hash, so this
+    gives the integers an all-pairs crossJoin + array_intersect would,
+    without its n^2/2 intersections. Pairs sharing no hash are absent."""
+    ex = sigs.select(F.col(id_col), F.explode("sig").alias("_h"))
+    sizes = sigs.select(F.col(id_col), F.size("sig").alias("_sz"))
+    a = ex.select(F.col(id_col).alias("id_a"), "_h")
+    b = ex.select(F.col(id_col).alias("id_b"), "_h")
+    inter = (
+        a.join(b, "_h")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("size_a"))
+    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("size_b"))
+    return (
+        inter.join(sza, "id_a")
+        .join(szb, "id_b")
+        .select("id_a", "id_b", "inter", "size_a", "size_b")
+    )
+
+
 def shingle_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -60,15 +89,11 @@ def shingle_jaccard_pairs(
     k=maxsize production estimate.
 
     This is the tiny-scale/verification form; the scale path is the banded
-    pipeline (plans/pipeline.py). Physical shape (round-8): any pair with
-    Jaccard >= threshold > 0 shares at least one hash, so the all-pairs
-    crossJoin + per-pair array_intersect is replaced by an equi-join on
-    exploded (id, hash) rows and a pair count — |A∩B| from the group count,
-    |A∪B| = |A| + |B| - |A∩B| from the signature sizes. Same integers, same
-    double division, same round(): the output is value-identical to the
-    crossJoin form (the oracle pins it); only the plan changed — the old
-    form computed n^2/2 array intersections to keep a handful of pairs.
-    A threshold <= 0 (keep disjoint pairs too) falls back to the quadratic
+    pipeline (plans/pipeline.py). A threshold > 0 goes through
+    `sketch_overlap_pairs`: |A∪B| = |A| + |B| - |A∩B|, the same double
+    division and round() as `jaccard_similarity`, so the output is
+    value-identical to the crossJoin form (the oracle pins it). A
+    threshold <= 0 (keep disjoint pairs too) falls back to the quadratic
     crossJoin, which is the only plan that can emit them.
     """
     cfg = SketchConfig(
@@ -77,9 +102,7 @@ def shingle_jaccard_pairs(
         hash_name="xxh64",
         seed=0,
     )
-    sigs = with_signature(docs.select(id_col, text_col), cfg, text_col).select(
-        F.col(id_col), F.col("sig")
-    )
+    sigs = sketch_table(docs, cfg, url_col=id_col, text_col=text_col)
     if threshold <= 0:
         a = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
         b = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -95,27 +118,14 @@ def shingle_jaccard_pairs(
             )
             .where(F.col("jaccard") >= threshold)
         )
-    ex = sigs.select(F.col(id_col), F.explode("sig").alias("_h"))
-    sizes = sigs.select(F.col(id_col), F.size("sig").alias("_sz"))
-    a = ex.select(F.col(id_col).alias("id_a"), "_h")
-    b = ex.select(F.col(id_col).alias("id_b"), "_h")
-    inter = (
-        a.join(b, "_h")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_i"))
-    )
-    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("_sza"))
-    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("_szb"))
-    union = F.col("_sza") + F.col("_szb") - F.col("_i")
+    union = F.col("size_a") + F.col("size_b") - F.col("inter")
     return (
-        inter.join(sza, "id_a")
-        .join(szb, "id_b")
+        sketch_overlap_pairs(sigs, id_col)
         .select(
             "id_a",
             "id_b",
             F.round(
-                F.col("_i").cast("double") / union.cast("double"), 6
+                F.col("inter").cast("double") / union.cast("double"), 6
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)

@@ -1,14 +1,17 @@
 """Signature operator: pages/docs DataFrame -> per-document MinHash sketch.
 
-The reference's hot path (`SetSketch.add`,
-/root/reference/src/minhashsketch.py:214-247: chunk -> batch C hash -> heap)
-becomes ONE vectorized pandas UDF: each Arrow batch's texts are concatenated
-and hashed in a single numpy pass, then per-document bottom-k is taken by
-unique+truncate (same set, no heap needed — the heap is an artifact of
-single-pass streaming execution).
+The reference's hot path (`SetSketch.add`, reference
+src/minhashsketch.py:214-247: chunk -> batch C hash -> heap) is ONE
+operator, `sketch_table`: a mapInArrow that reads each Arrow batch's text
+bytes zero-copy, hashes the whole batch in a single vectorized pass, and
+takes per-document bottom-k by unique+truncate (same set, no heap needed —
+the heap is an artifact of single-pass streaming execution). Every
+signature in the package — pipeline, rollup, sharding, incremental and
+streaming admission, the entry queries — comes from it.
 
-Plan shape: narrow projection into the UDF (url, text only) so Parquet
-column pruning survives; no shuffle — the sketch is per-row.
+Plan shape: narrow projection into the operator (id, text only) so Parquet
+column pruning survives; no shuffle — the sketch is per-row. The counted
+and n-gram UDFs below are opt-in variants with a different output shape.
 """
 
 from __future__ import annotations
@@ -27,34 +30,11 @@ from pyspark.sql.types import (
 )
 
 from ..config import SketchConfig
-from ..functions.sketch_np import batch_signatures
 
 SIGNATURE_FIELDS = [
     StructField("sig", ArrayType(LongType(), containsNull=False), nullable=False),
     StructField("nvisited", LongType(), nullable=False),
 ]
-
-
-def make_signature_udf(cfg: SketchConfig):
-    """Scalar pandas UDF: text (string) -> struct<sig: array<bigint>, nvisited: bigint>.
-
-    Signed bigints hold the uint64 bit pattern; arrays are ascending in
-    *unsigned* order (the order the reference's sorted bottom-k defines).
-    """
-
-    schema = StructType(SIGNATURE_FIELDS)
-
-    @F.pandas_udf(schema)
-    def signature_udf(text_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in text_iter:
-            payload = [
-                t.encode("utf-8") if isinstance(t, str) else (t or b"")
-                for t in texts.fillna("")
-            ]
-            sigs, nvis = batch_signatures(payload, cfg)
-            yield pd.DataFrame({"sig": sigs, "nvisited": nvis})
-
-    return signature_udf
 
 
 def make_counted_signature_udf(cfg: SketchConfig):
@@ -121,24 +101,6 @@ def make_ngram_signature_udf(cfg: SketchConfig):
     return ngram_sig_udf
 
 
-def with_signature(
-    df: DataFrame,
-    cfg: SketchConfig,
-    text_col: str = "text",
-    out_prefix: str = "",
-) -> DataFrame:
-    """Append `sig` (array<bigint>) and `nvisited` (bigint) columns."""
-    udf = make_signature_udf(cfg)
-    tmp = f"_sk_{out_prefix or 'sig'}"
-    struct_col = udf(F.col(text_col))
-    return (
-        df.withColumn(tmp, struct_col)
-        .withColumn(f"{out_prefix}sig", F.col(f"{tmp}.sig"))
-        .withColumn(f"{out_prefix}nvisited", F.col(f"{tmp}.nvisited"))
-        .drop(tmp)
-    )
-
-
 def _string_array_as_buffer(arr) -> tuple:
     """Zero-copy view of a pyarrow String/LargeString/Binary array as
     (byte buffer uint8[], starts int64[], lens int64[]).
@@ -191,7 +153,6 @@ def sketch_table(
     (check `.explain`: ReadSchema must not include html/lang/warc_ts).
     """
     import pyarrow as pa
-    from typing import Iterator as _Iter
 
     from ..functions.sketch_np import signatures_from_buffer
 
@@ -205,7 +166,7 @@ def sketch_table(
     )
     sig_type = pa.list_(pa.field("element", pa.int64(), nullable=False))
 
-    def compute(batches: _Iter[pa.RecordBatch]) -> _Iter[pa.RecordBatch]:
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             urls = rb.column(0)
             buf, starts, lens = _string_array_as_buffer(rb.column(1))

@@ -6,7 +6,7 @@ store / Iceberg); new pages then stream in and are checked against that
 index WITHOUT re-scanning the corpus:
 
     stream(url, text)
-      -> signature UDF                (same kernel as batch, bit-identical)
+      -> sketch_table                 (the batch sketch operator, bit-identical)
       -> band keys UDF + explode      (same OPH rehash, same config)
       -> stream-static equi-join on band_key against the committed bands
       -> attach static signature, exact Jaccard verify (>= tau)
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.banding import make_band_keys_udf
-from ..operators.signature import make_signature_udf
+from ..operators.signature import sketch_table
 from ..operators.verify import _jaccard_udf
 
 
@@ -48,12 +48,10 @@ def streaming_near_dup_matches(
 ) -> DataFrame:
     """stream(url, text) x committed (signatures, bands) -> append stream
     of (new_url, match_url, jaccard >= tau)."""
-    sig_udf = make_signature_udf(cfg.sketch)
     band_udf = make_band_keys_udf(cfg)
-    sigs = stream.select(
-        F.col(url_col).alias("new_url"),
-        sig_udf(F.col(text_col)).alias("_s"),
-    ).select("new_url", F.col("_s.sig").alias("new_sig"))
+    sigs = sketch_table(stream, cfg.sketch, url_col, text_col).select(
+        F.col(url_col).alias("new_url"), F.col("sig").alias("new_sig")
+    )
     banded = sigs.select(
         "new_url",
         "new_sig",

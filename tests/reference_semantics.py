@@ -3,12 +3,12 @@
 This is the *test oracle*: an independently written, deliberately naive
 single-pass insert-or-replace heap sketch with the same observable
 semantics as the reference's `_minmaxhash_add_ngrams`
-(/root/reference/src/minhashsketch.py:13-82) — k distinct extreme uint64
+(reference src/minhashsketch.py:13-82) — k distinct extreme uint64
 hashes, `nvisited` counting shingles considered, associative/commutative
 merge with config compatibility checks. The Spark engine never calls this;
 tests assert engine output == oracle output, mirroring how the reference's
 own suite recomputes brute-force oracles in-test
-(/root/reference/src/tests/test_minhashsketch.py:15-27).
+(reference src/tests/test_minhashsketch.py:15-27).
 
 Known reference defects intentionally NOT reproduced (SURVEY.md §7.3):
 ``__iadd__`` returning None, ``SketchList.map_sequences`` generator
@@ -20,8 +20,8 @@ from __future__ import annotations
 import heapq
 from collections import Counter
 
-from .config import SketchConfig
-from .functions.sketch_np import doc_hashes
+from mashing_pumpkins_spark.config import SketchConfig
+from mashing_pumpkins_spark.functions.sketch_np import doc_hashes
 
 MASK64 = (1 << 64) - 1
 
@@ -34,7 +34,7 @@ class HeapSketch:
         self.nvisited = 0
         # heap root must be the *eviction candidate*: for bottom-k that is
         # the largest retained value, so store negated values (the same
-        # trick as /root/reference/src/minhashsketch.py:8-10, :396).
+        # trick as reference src/minhashsketch.py:8-10, :396).
         self._sign = -1 if cfg.minmax == "min" else 1
         self._heap: list[int] = []
         self._members: set[int] = set()
@@ -67,7 +67,7 @@ class HeapSketch:
 
     def add_hashvalues(self, values) -> "HeapSketch":
         """Ingest pre-hashed values; does NOT bump nvisited (reference
-        behavior, /root/reference/src/minhashsketch.py:272-275)."""
+        behavior, reference src/minhashsketch.py:272-275)."""
         for h in values:
             self._consider(int(h))
         return self
@@ -101,7 +101,7 @@ class HeapSketch:
 
 class HeapCountSketch(HeapSketch):
     """Sketch + per-retained-hash sighting counts (reference CountTrait,
-    /root/reference/src/minhashsketch.py:536-565)."""
+    reference src/minhashsketch.py:536-565)."""
 
     def __init__(self, cfg: SketchConfig):
         super().__init__(cfg)

@@ -7,7 +7,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mashing_pumpkins_spark.config import SketchConfig
 from mashing_pumpkins_spark.functions.simhash import (
     hamming64,
     simhash_batch,
@@ -424,48 +423,6 @@ def test_multimodal_plumbing(spark):
         decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
 
 
-def test_streaming_sketch_aggregate(spark, tmp_path):
-    """Two micro-batches of chunks -> state equals the merged sketch of all
-    chunks (reference map/reduce equivalence, test_parallel.py:80-105)."""
-    from mashing_pumpkins_spark.functions.sketch_np import (
-        merge_signatures,
-        signature,
-    )
-    from mashing_pumpkins_spark.hashkernels import i64_to_u64
-    from mashing_pumpkins_spark.streaming.sketch_stream import (
-        streaming_sketch_aggregate,
-    )
-
-    cfg = SketchConfig(nsize=5, maxsize=16, hash_name="xxh64", seed=0)
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    chunk1 = "the quick brown fox jumps over the lazy dog " * 3
-    chunk2 = "pack my box with five dozen liquor jugs " * 3
-    pd.DataFrame({"key": ["k1"], "text": [chunk1]}).to_parquet(src / "b1.parquet")
-    pd.DataFrame({"key": ["k1"], "text": [chunk2]}).to_parquet(src / "b2.parquet")
-
-    stream = spark.readStream.schema("key string, text string").parquet(str(src))
-    out = streaming_sketch_aggregate(stream, cfg)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sketch_stream_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "select * from sketch_stream_test order by nvisited desc limit 1"
-    ).collect()
-    assert rows, "no streaming output"
-    got = i64_to_u64(np.array(rows[0]["sig"], dtype=np.int64)).tolist()
-    s1, nv1 = signature(chunk1.encode(), cfg)
-    s2, nv2 = signature(chunk2.encode(), cfg)
-    expect = merge_signatures(s1, s2, cfg.maxsize).tolist()
-    assert got == expect
-    assert rows[0]["nvisited"] == nv1 + nv2
-
-
 def test_ann_lsh_multiprobe_beats_single_probe(spark):
     """Multi-probe (flip weakest-margin bits) must recover planted twins a
     single 16-plane table misses."""
@@ -498,7 +455,8 @@ def test_ann_lsh_multiprobe_beats_single_probe(spark):
 
 def test_streaming_near_dup_matches(spark, tmp_path):
     """New pages streaming in are matched against the committed corpus
-    index (stream-static band join + exact verify)."""
+    index (stream-static band join + exact verify), sketched by the same
+    operator as the batch pipeline."""
     import pandas as pd
 
     from mashing_pumpkins_spark.config import PipelineConfig
@@ -537,6 +495,9 @@ def test_streaming_near_dup_matches(spark, tmp_path):
     out = streaming_near_dup_matches(
         stream, spark.read.parquet(sp), spark.read.parquet(bp), cfg
     )
+    # the stream is sketched by the batch operator (sketch_table's
+    # mapInArrow), not by a per-row pandas UDF
+    assert "MapInArrow" in out._jdf.queryExecution().analyzed().toString()
     q = (
         out.writeStream.format("memory")
         .queryName("near_dup_stream_test")
@@ -551,69 +512,6 @@ def test_streaming_near_dup_matches(spark, tmp_path):
     assert ("n0", "c1") in got, got
     assert all(u != "n1" for u, _ in got), got
     assert all(r["jaccard"] >= 0.8 for r in rows)
-
-
-def test_streaming_windowed_stats_drops_late_data(spark, tmp_path):
-    """Watermarked window agg: once the watermark passes a window and its
-    state is evicted (append emission), a straggler row for that window is
-    dropped — the window is emitted exactly once with on-time rows only.
-    (Spark guarantees dropping only AFTER eviction; a late row arriving in
-    the same batch that evicts may still merge, so the straggler here lands
-    two batches later.)"""
-    import time as _time
-
-    import pandas as pd
-
-    from mashing_pumpkins_spark.streaming.windowed import (
-        streaming_windowed_doc_stats,
-    )
-
-    src = tmp_path / "win_src"
-    src.mkdir()
-    d = "2026-01-01 "
-
-    def write(name, stamps, texts):
-        pd.DataFrame(
-            {
-                "ts": pd.to_datetime([d + s for s in stamps]).astype(
-                    "datetime64[us]"
-                ),
-                "text": texts,
-            }
-        ).to_parquet(src / name)
-        _time.sleep(1.1)  # file mtime ordering -> batch ordering
-
-    # batch 0: window [10:00,11:00) gets its on-time rows; 12:59 advances
-    # the watermark to 12:29 for the next batch
-    write("a.parquet", ["10:00:00", "10:30:00", "12:59:00"], ["aaaa", "bb", "cc"])
-    # batch 1: watermark 12:29 > 11:00 -> window [10,11) emits (n=2) and is
-    # evicted at end of this batch
-    write("b.parquet", ["13:05:00"], ["dd"])
-    # batch 2: 10:45 is a straggler for the EVICTED window -> dropped
-    write("c.parquet", ["10:45:00", "13:40:00"], ["LATE", "ee"])
-
-    stream = (
-        spark.readStream.schema("ts timestamp, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = streaming_windowed_doc_stats(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_stats_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = [
-        r
-        for r in spark.sql("select * from win_stats_test").collect()
-        if str(r["window_start"]) == "2026-01-01 10:00:00"
-    ]
-    assert len(rows) == 1, rows  # emitted exactly once, never re-opened
-    assert rows[0]["n_docs"] == 2, "straggler 10:45 row must NOT count"
-    assert rows[0]["n_bytes"] == 6  # 'aaaa' + 'bb'
 
 
 def test_streaming_admission_gate_matches_batch_operators(spark, tmp_path):
@@ -796,43 +694,3 @@ def test_streaming_admission_html_input(spark, tmp_path):
     assert got["ok"]["admitted"] is True
     assert got["junk"]["quality_ok"] is False and got["junk"]["admitted"] is False
     assert got["broken"]["quality_ok"] is False and got["broken"]["admitted"] is False
-
-
-def test_streaming_exact_dedup_admits_first_occurrence_only(spark, tmp_path):
-    """Two micro-batches with intra-batch AND cross-batch exact dups:
-    every distinct content admits exactly once, later arrivals carry the
-    representative url — parity with the batch collapse's (rep, edges)
-    split."""
-    from mashing_pumpkins_spark.streaming.dedup_stream import streaming_exact_dedup
-
-    src = tmp_path / "dedup_stream_src"
-    src.mkdir()
-    a, b, c = "alpha content body", "beta content body", "gamma content body"
-    pd.DataFrame(
-        {"url": ["u1", "u2", "u3"], "text": [a, a, b]}
-    ).to_parquet(src / "b1.parquet")
-    pd.DataFrame(
-        {"url": ["u4", "u5"], "text": [a, c]}
-    ).to_parquet(src / "b2.parquet")
-
-    stream = spark.readStream.schema("url string, text string").parquet(str(src))
-    out = streaming_exact_dedup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stream_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from dedup_stream_test").collect()
-    got = {r["url"]: (r["is_first"], r["rep_url"]) for r in rows}
-    assert len(got) == 5
-    firsts = {u for u, (f, _) in got.items() if f == 1}
-    # exactly one admission per distinct content; u1 is a's rep
-    assert firsts == {"u1", "u3", "u5"}
-    assert got["u2"] == (0, "u1")
-    assert got["u4"] == (0, "u1")  # cross-batch dup resolves to the same rep
-    # dup_seq counts arrivals per content
-    seqs = {r["url"]: r["dup_seq"] for r in rows}
-    assert seqs["u1"] == 1 and seqs["u2"] == 2 and seqs["u4"] == 3

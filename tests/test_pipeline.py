@@ -360,7 +360,7 @@ def test_cluster_quality_report_flags_transitive_chaining(spark):
     from mashing_pumpkins_spark.operators.cluster_report import (
         cluster_quality_report,
     )
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     words = [f"tok{i}" for i in range(300)]
     a = " ".join(words[0:200])            # hub (min url)
@@ -374,7 +374,7 @@ def test_cluster_quality_report_flags_transitive_chaining(spark):
         "url string, cluster_id string",
     )
     cfg = SketchConfig(nsize=21, maxsize=1 << 30, hash_name="xxh64", seed=0)
-    sigs = with_signature(docs, cfg, "text").select("url", "sig")
+    sigs = sketch_table(docs, cfg).select("url", "sig")
     rep = cluster_quality_report(clusters, sigs).collect()
     assert len(rep) == 1
     r = rep[0]
@@ -391,7 +391,7 @@ def test_cluster_quality_report_missing_hub_surfaces_not_drops(spark):
     from mashing_pumpkins_spark.operators.cluster_report import (
         cluster_quality_report,
     )
-    from mashing_pumpkins_spark.operators.signature import with_signature
+    from mashing_pumpkins_spark.operators.signature import sketch_table
 
     words = [f"tok{i}" for i in range(200)]
     docs = spark.createDataFrame(
@@ -404,7 +404,7 @@ def test_cluster_quality_report_missing_hub_surfaces_not_drops(spark):
         "url string, cluster_id string",
     )
     cfg = SketchConfig(nsize=21, maxsize=1 << 30, hash_name="xxh64", seed=0)
-    sigs = with_signature(docs, cfg, "text").select("url", "sig")
+    sigs = sketch_table(docs, cfg).select("url", "sig")
     rep = cluster_quality_report(clusters, sigs).collect()
     assert len(rep) == 1
     r = rep[0]

@@ -12,7 +12,7 @@ import pytest
 from mashing_pumpkins_spark.config import SketchConfig
 from mashing_pumpkins_spark.hashkernels import i64_to_u64
 from mashing_pumpkins_spark.operators.rollup import group_sketch_rollup
-from mashing_pumpkins_spark.reference_semantics import HeapSketch
+from reference_semantics import HeapSketch
 
 
 def test_rollup_matches_heap_oracle_merge(spark):

@@ -26,7 +26,7 @@ from mashing_pumpkins_spark.functions.sketch_np import (
 )
 from mashing_pumpkins_spark.hashkernels import i64_to_u64
 from mashing_pumpkins_spark.functions.sketch_np import batch_signatures
-from mashing_pumpkins_spark.reference_semantics import HeapCountSketch, HeapSketch
+from reference_semantics import HeapCountSketch, HeapSketch
 
 
 def _random_text(rng: random.Random, n: int) -> bytes:

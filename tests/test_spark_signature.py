@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -27,14 +29,22 @@ def pages_df(spark):
     return spark.createDataFrame(pages)
 
 
-def test_sketch_table_matches_numpy(spark, pages_df):
-    out = sketch_table(pages_df, CFG).orderBy("url").collect()
-    rows = {r["url"]: r for r in pages_df.select("url", "text").collect()}
-    assert len(out) == 120
+@pytest.mark.parametrize("minmax", ["min", "max"])
+@pytest.mark.parametrize("id_col", ["url", "doc_id"])
+def test_sketch_table_matches_numpy(spark, pages_df, minmax, id_col):
+    """Every config direction, keyed by a string url or by the bigint
+    doc_id the entry queries pass."""
+    cfg = dataclasses.replace(CFG, minmax=minmax)
+    docs = pages_df.select(
+        F.monotonically_increasing_id().alias("doc_id"), "url", "text"
+    )
+    texts = {r[id_col]: r["text"] for r in docs.collect()}
+    out = sketch_table(docs, cfg, url_col=id_col).collect()
+    assert len(out) == 120 and len(texts) == 120
     for row in out:
-        expect, nv = signature(rows[row["url"]]["text"].encode("utf-8"), CFG)
+        expect, nv = signature(texts[row[id_col]].encode("utf-8"), cfg)
         got = i64_to_u64(np.array(row["sig"], dtype=np.int64))
-        assert got.tolist() == expect.tolist(), row["url"]
+        assert got.tolist() == expect.tolist(), row[id_col]
         assert row["nvisited"] == nv
 
 
