@@ -83,13 +83,25 @@ def choose_banding(
 
 
 
-def _config_hash(cfg) -> str:
+def _config_hash(cfg, layout: int | None = None) -> str:
     """One hashing recipe for every frozen config dataclass: JSON of every
-    field, sorted keys, sha256[:16]. A single definition keeps the
-    manifest-hash format identical across Sketch/Pipeline/Curation configs
-    — divergent copies would silently desynchronize checkpoint gating."""
-    payload = json.dumps(asdict(cfg), sort_keys=True).encode()
+    field (and of a stage-layout version, when given), sorted keys,
+    sha256[:16]. A single definition keeps the manifest-hash format
+    identical across Sketch/Pipeline/Curation configs — divergent copies
+    would silently desynchronize checkpoint gating."""
+    fields = asdict(cfg)
+    if layout is not None:
+        fields["_layout"] = layout
+    payload = json.dumps(fields, sort_keys=True).encode()
     return hashlib.sha256(payload).hexdigest()[:16]
+
+
+# Version of what the pipeline's stages hold for a given PipelineConfig.
+# Bump it when a stage's rows change for the same config, so a checkpoint
+# written by the old stages is never resumed. 2: the candidates stage holds
+# round-1 hub pairs and the edges stage round-1 and round-2 edges
+# (operators/candidates.py).
+PIPELINE_LAYOUT = 2
 
 
 @dataclass(frozen=True)
@@ -136,13 +148,13 @@ class PipelineConfig:
     # probability is still the (sub)sketch Jaccard — at maxsize=1000 this
     # cuts banding CPU 4x with the same S-curve
     band_input_k: int = 256
-    # skew control: a band bucket with more than this many docs is
-    # star-linked (every member pairs with the bucket's min id) instead of
-    # producing all C(n,2) pairs — nothing is dropped; transitive closure
-    # recovers the clique through the star center. Caveat: if one over-cap
-    # bucket holds multiple distinct near-dup cliques, intra-bucket edges
-    # between non-center members are not emitted and recall for those pairs
-    # relies on the other n_bands-1 bands (operators/candidates.py).
+    # skew control: every band bucket is first star-linked (each member
+    # pairs with the bucket's min id); only a bucket of at most this many
+    # docs is then paired across the star's verified components (round 2,
+    # operators/candidates.py), so the cap bounds round 2's lists. Caveat:
+    # if one over-cap bucket holds multiple distinct near-dup cliques,
+    # intra-bucket edges between non-center members are not emitted and
+    # recall for those pairs relies on the other n_bands-1 bands.
     band_group_cap: int = 2000
     min_doc_bytes: int = 21  # docs shorter than one shingle produce no sketch
     # long-document sharding: when > 0, docs whose UTF-8 encoding exceeds
@@ -210,7 +222,7 @@ class PipelineConfig:
         # changes band keys, band_group_cap changes candidate pairs,
         # min_doc_bytes changes extract) must invalidate checkpoints —
         # resuming across a semantic change would silently give wrong clusters
-        return _config_hash(self)
+        return _config_hash(self, PIPELINE_LAYOUT)
 
 
 @dataclass(frozen=True)

@@ -31,6 +31,13 @@ signature values and the prefix values. On those actual bytes:
   prefix values equal the full values) phase 1 would be exact, so only
   phase 2 runs.
 
+`verify_scorer` makes that decision once and returns a scorer, a lazy
+pairs -> edges function. The pipeline builds it on round 1's candidates
+and applies it to both candidate rounds (operators/candidates.py): every
+round-2 url is a member of a round-1 pair, so it is in round 1's slice,
+and a broadcast scorer raises on a url that is not. `verified_edges` is
+the scorer of a pair table applied to that table.
+
 Scoring is the C sorted-merge intersect kernel (operators/_intersect_cext)
 over a whole Arrow batch per call, with np.intersect1d for rows that are
 not sorted-unique and when the kernel is unavailable: results are
@@ -40,7 +47,7 @@ bit-identical either way.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Tuple
+from typing import Callable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -179,17 +186,18 @@ def _collect_slice_flat(
 
 def _broadcast_score(
     pairs: DataFrame,
-    sl: DataFrame,
+    bc,
     threshold: float,
     emit_jaccard: bool,
 ) -> DataFrame:
-    """Shared broadcast scoring pass: the signature slice ``sl`` rides to every
-    task as a flat buffer, the pair table streams through ONE mapInPandas
-    (zero join shuffles), and each batch is scored by the C sorted-merge
-    kernel (numpy per-pair fallback, bit-identical — see
-    _pair_jaccard_block). With emit_jaccard this IS the verify stage; without
-    it it is the phase-1 prefix prefilter (same float predicate either way).
-    """
+    """Shared broadcast scoring pass: the collected signature slice ``bc``
+    (a broadcast of _collect_slice_flat) rides to every task as a flat
+    buffer, the pair table streams through ONE mapInPandas (zero join
+    shuffles), and each batch is scored by the C sorted-merge kernel (numpy
+    per-pair fallback, bit-identical — see _pair_jaccard_block). With
+    emit_jaccard this IS the verify stage; without it it is the phase-1
+    prefix prefilter (same float predicate either way). A url missing from
+    the slice raises: scoring it as 0 would drop a pair silently."""
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -197,9 +205,6 @@ def _broadcast_score(
         StructType,
     )
 
-    spark = pairs.sparkSession
-    flat, starts, lens, idx, viol = _collect_slice_flat(sl)
-    bc = spark.sparkContext.broadcast((flat, starts, lens, idx, viol))
     fields = [StructField("url_a", StringType()), StructField("url_b", StringType())]
     if emit_jaccard:
         fields.append(StructField("jaccard", DoubleType()))
@@ -214,13 +219,16 @@ def _broadcast_score(
             n = len(pdf)
             ia = np.fromiter((get(u, -1) for u in ua), np.int64, n)
             ib = np.fromiter((get(u, -1) for u in ub), np.int64, n)
+            missing = np.flatnonzero((ia < 0) | (ib < 0))
+            if missing.size:
+                i = missing[0]
+                url = ua.iloc[i] if ia[i] < 0 else ub.iloc[i]
+                raise KeyError(
+                    f"url {url!r} of a verify pair is not in the broadcast signature slice"
+                )
             inter = _intersect_cext.intersect_counts_indexed(vals, st, ln, ia, ib)
-            la = np.zeros(n, dtype=np.int64)
-            lb = np.zeros(n, dtype=np.int64)
-            ma = ia >= 0
-            mb = ib >= 0
-            la[ma] = ln[ia[ma]]
-            lb[mb] = ln[ib[mb]]
+            la = ln[ia]
+            lb = ln[ib]
             redo = None
             if inter is None:
                 redo = range(n)
@@ -229,8 +237,6 @@ def _broadcast_score(
                 redo = np.flatnonzero(np.isin(ia, viol) | np.isin(ib, viol))
             if redo is not None:
                 for i in redo:
-                    if ia[i] < 0 or ib[i] < 0:
-                        continue
                     xa = vals[st[ia[i]] : st[ia[i]] + ln[ia[i]]]
                     yb = vals[st[ib[i]] : st[ib[i]] + ln[ib[i]]]
                     inter[i] = (
@@ -257,36 +263,42 @@ def _broadcast_score(
     return pairs.select("url_a", "url_b").mapInPandas(score, out_schema)
 
 
-def verified_edges(
+def verify_scorer(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: PipelineConfig,
     broadcast_cap_bytes: int = 160 << 20,
-) -> DataFrame:
-    """pairs(url_a, url_b) x signatures(url, sig) -> edges(url_a, url_b, jaccard >= tau).
+) -> Callable[[DataFrame], DataFrame]:
+    """The strategy decision (module docstring) for the candidate slice of
+    ``pairs``, made once: returns score(pairs') -> edges(url_a, url_b,
+    jaccard >= tau). The aggregate, and on a broadcast path the collect and
+    the broadcast, run here; every scorer call is lazy. A scorer applies to
+    any pair table whose urls are in the slice of ``pairs`` (the broadcast
+    paths raise on any other url).
 
-    The strategy (module docstring) is chosen on the bytes a broadcast of
-    the candidate slice would carry: 8 B per signature value plus the
-    int64 start and length of each row. Cap rationale (round-8
-    re-measure): the slice collects via ONE Arrow toArrow pass into a flat
-    buffer — measured ~2 s for the 99 MB bench-corpus slice INCLUDING the
-    semi-join scan (flatten + url-index build 0.04 s, broadcast pickle
-    1.0 s), vs ~120 s for the 320 MB row-pickle toPandas dict that set the
-    old 48 MB cap; executor-side cost is one mmap-read per python worker.
-    160 MB keeps driver+worker residency bounded (32 workers x slice)
-    while letting bench-scale candidate sets take the zero-shuffle path."""
+    The strategy is chosen on the bytes a broadcast of the candidate slice
+    would carry: 8 B per signature value plus the int64 start and length
+    of each row. Cap rationale (round-8 re-measure): the slice collects via
+    ONE Arrow toArrow pass into a flat buffer — measured ~2 s for the 99 MB
+    bench-corpus slice INCLUDING the semi-join scan (flatten + url-index
+    build 0.04 s, broadcast pickle 1.0 s), vs ~120 s for the 320 MB
+    row-pickle toPandas dict that set the old 48 MB cap; executor-side cost
+    is one mmap-read per python worker. 160 MB keeps driver+worker
+    residency bounded (32 workers x slice) while letting bench-scale
+    candidate sets take the zero-shuffle path."""
     from pyspark.storagelevel import StorageLevel
 
     tau = cfg.jaccard_threshold
     k = cfg.prefilter_k
     sigs = signatures.select("url", "sig")
+    spark = pairs.sparkSession
     # The candidate slice feeds the dispatch aggregate and the broadcast
     # collect: persisting it builds the url set and the semi join once
     # (persisting only the url set makes the collect broadcast it again,
     # one more job). On the join path nothing reads it after the
     # aggregate, so there it costs one cache write of the slice. Both
-    # consumers run before the function returns, and the returned plan
-    # never reads it, so the unpersist is safe.
+    # consumers run before the function returns, and no scorer reads it,
+    # so the unpersist is safe.
     sl = _candidate_slice(pairs, sigs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         size = F.size("sig")
@@ -302,29 +314,55 @@ def verified_edges(
         def fits(n_values: int) -> bool:
             return 8 * (n_values + 2 * n) <= broadcast_cap_bytes
 
+        def broadcast(s: DataFrame):
+            return spark.sparkContext.broadcast(_collect_slice_flat(s))
+
         if fits(full):
-            return _broadcast_score(pairs, sl, tau, emit_jaccard=True)
+            bc = broadcast(sl)
+            return lambda p: _broadcast_score(p, bc, tau, emit_jaccard=True)
+        sigma = math.sqrt(tau * (1.0 - tau) / k)
+        pre_tau = max(0.0, tau - 6.0 * sigma)
+        prefix_sig = F.slice("sig", 1, k).alias("sig")
         if prefix == full:
-            survivors = pairs.select("url_a", "url_b")
+
+            def prefilter(p: DataFrame) -> DataFrame:
+                return p.select("url_a", "url_b")
+
+        elif fits(prefix):
+            bc = broadcast(sl.select("url", prefix_sig))
+
+            def prefilter(p: DataFrame) -> DataFrame:
+                return _broadcast_score(p, bc, pre_tau, emit_jaccard=False)
+
         else:
-            sigma = math.sqrt(tau * (1.0 - tau) / k)
-            pre_tau = max(0.0, tau - 6.0 * sigma)
-            prefix_sig = F.slice("sig", 1, k).alias("sig")
-            if fits(prefix):
-                survivors = _broadcast_score(
-                    pairs, sl.select("url", prefix_sig), pre_tau, emit_jaccard=False
-                )
-            else:
-                survivors = (
-                    _join_sigs(pairs.select("url_a", "url_b"), sigs.select("url", prefix_sig))
+
+            def prefilter(p: DataFrame) -> DataFrame:
+                return (
+                    _join_sigs(p.select("url_a", "url_b"), sigs.select("url", prefix_sig))
                     .where(_jaccard_udf("sig_a", "sig_b") >= pre_tau)
                     .select("url_a", "url_b")
                 )
-        return (
-            _join_sigs(survivors, sigs)
-            .withColumn("jaccard", F.round(_jaccard_udf("sig_a", "sig_b"), 9))
-            .where(F.col("jaccard") >= tau)
-            .select("url_a", "url_b", "jaccard")
-        )
+
+        def score(p: DataFrame) -> DataFrame:
+            return (
+                _join_sigs(prefilter(p), sigs)
+                .withColumn("jaccard", F.round(_jaccard_udf("sig_a", "sig_b"), 9))
+                .where(F.col("jaccard") >= tau)
+                .select("url_a", "url_b", "jaccard")
+            )
+
+        return score
     finally:
         sl.unpersist()
+
+
+def verified_edges(
+    pairs: DataFrame,
+    signatures: DataFrame,
+    cfg: PipelineConfig,
+    broadcast_cap_bytes: int = 160 << 20,
+) -> DataFrame:
+    """pairs(url_a, url_b) x signatures(url, sig) -> edges(url_a, url_b,
+    jaccard >= tau): verify_scorer's decision for ``pairs``, applied to
+    ``pairs``."""
+    return verify_scorer(pairs, signatures, cfg, broadcast_cap_bytes)(pairs)

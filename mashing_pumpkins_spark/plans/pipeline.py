@@ -1,7 +1,17 @@
 """End-to-end near-duplicate pipeline (SURVEY.md §2.3 stage order).
 
     pages -> extract -> exact-dup collapse -> sketch -> bands
-          -> candidates (skew-aware) -> verify -> cluster
+          -> candidates (round 1) -> edges (verify, label, round 2) -> cluster
+
+Near-dup linking runs in two exact rounds (operators/candidates.py). The
+candidates stage holds round 1: each band bucket's members paired with the
+bucket's minimum url. The edges stage verifies them, labels the urls with
+the connected components of the round-1 edges, and verifies round 2: the
+pairs of under-cap buckets whose members carry different labels, unless
+every round-1 pair verified. It writes round-1 and round-2 edges. The
+clusters stage is the connected components of those edges and the
+exact-duplicate edges: the same clusters as scoring every within-bucket
+pair, from far fewer scored pairs.
 
 One stage list, two stores. `run_pipeline` hands each stage to a store's
 `get_or_compute`: the parquet checkpoint store commits every stage before
@@ -14,16 +24,16 @@ and releases them before it returns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.banding import band_table
-from ..operators.candidates import candidate_pairs
+from ..operators.candidates import candidate_pairs, cross_label_pairs
 from ..operators.connected_components import connected_components_auto
 from ..operators.exact import collapse_exact_duplicates
 from ..operators.signature import sketch_table
-from ..operators.verify import verified_edges
+from ..operators.verify import verify_scorer
 from .checkpoint import ParquetCheckpointStore, PersistStore, StageResult
 
 
@@ -31,33 +41,15 @@ class RunReport:
     """Stage metrics for one pipeline run.
 
     ``star_buckets`` / ``star_members`` (the over-cap skew lineage) are
-    LAZY: reading them runs one small aggregate over the band table on
-    FIRST access (guide §1.2: don't spend a full band-table pass on numbers
-    the caller may never read — the bench path reads only the clusters).
-    Access them while the store is still alive; values are cached after the
-    first read. They read None when nothing measured them: the candidates
-    stage was resumed from a snapshot, or the run was a flow, whose stages
-    are released before the report is returned."""
+    observed on round 1's annotated band table while the candidates stage
+    runs, at no extra job. They read None when the candidates stage was
+    resumed from a snapshot: nothing observed it."""
 
     def __init__(self):
         self.stages: list[StageResult] = []
         self.cc_iterations = 0
-        self._stars: tuple[int, int] | None = None
-        self._star_thunk = None
-
-    def _star(self, i: int) -> int | None:
-        if self._star_thunk is not None:
-            thunk, self._star_thunk = self._star_thunk, None
-            self._stars = thunk()
-        return None if self._stars is None else self._stars[i]
-
-    @property
-    def star_buckets(self) -> int | None:
-        return self._star(0)
-
-    @property
-    def star_members(self) -> int | None:
-        return self._star(1)
+        self.star_buckets: int | None = None
+        self.star_members: int | None = None
 
     def to_dict(self) -> dict:
         return {
@@ -137,38 +129,111 @@ def run_pipeline(
         report.stages.append(res)
         return df
 
-    docs = stage("extract", lambda: extract(pages, cfg))
+    held: list[DataFrame] = []  # round-1 edges, released on return
+    observed: list[Observation] = []
+    try:
+        docs = stage("extract", lambda: extract(pages, cfg))
+        exact = stage("exact", lambda: collapse_exact_duplicates(docs))
+        signatures = stage("signatures", lambda: _sketch_stage(exact, cfg))
+        bands = stage("bands", lambda: band_table(signatures, cfg))
 
-    exact = stage("exact", lambda: collapse_exact_duplicates(docs))
-    signatures = stage("signatures", lambda: _sketch_stage(exact, cfg))
-    bands = stage("bands", lambda: band_table(signatures, cfg))
+        def _candidates():
+            pairs, stars = candidate_pairs(bands, cfg)
+            observed.append(stars)
+            return pairs
 
-    def _candidates():
-        pairs, skew = candidate_pairs(bands, cfg)
+        pairs = stage("candidates", _candidates)
 
-        def stars() -> tuple[int, int]:
-            skew_rows = skew.agg(
-                F.count("*").alias("b"),
-                F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("m"),
-            ).first()
-            return int(skew_rows["b"]), int(skew_rows["m"])
+        def _edges():
+            edges, round1 = verified_rounds(pairs, bands, signatures, cfg)
+            held.append(round1)
+            return edges
 
-        report._star_thunk = stars
-        return pairs
+        near_edges = stage("edges", _edges)
+        all_edges = near_edges.select("url_a", "url_b").union(
+            exact.where(F.col("kind") == "edge").select(
+                F.col("url").alias("url_a"), "url_b"
+            )
+        )
 
-    pairs = stage("candidates", _candidates)
-    near_edges = stage("edges", lambda: verified_edges(pairs, signatures, cfg))
-    all_edges = near_edges.select("url_a", "url_b").union(
-        exact.where(F.col("kind") == "edge").select(F.col("url").alias("url_a"), "url_b")
-    )
+        def _cluster():
+            clusters, iters = connected_components_auto(all_edges)
+            report.cc_iterations = iters
+            return clusters
 
-    def _cluster():
-        clusters, iters = connected_components_auto(all_edges)
-        report.cc_iterations = iters
-        return clusters
-
-    clusters = stage("clusters", _cluster)
+        clusters = stage("clusters", _cluster)
+    finally:
+        for df in held:
+            df.unpersist()
+    if observed:
+        report.star_buckets, report.star_members = _stars(spark, observed[0])
     return clusters, report
+
+
+def verified_rounds(
+    pairs: DataFrame, bands: DataFrame, signatures: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """Round-1 pairs (candidates stage) -> (edges, round-1 edges).
+
+    One verify dispatch serves both rounds: the scorer is built on round
+    1's candidates. Round 1's edges are persisted and materialized here,
+    because the round-1 labelling and the returned edges both read them;
+    the caller unpersists them once the edges are consumed. When every
+    round-1 pair verified, each bucket's members are linked to its hub, so
+    round 2 would be empty and the round-1 edges are returned as they are.
+    Otherwise round 2 pairs only under-cap buckets whose members carry
+    different round-1 labels (operators/candidates.py) and stays lazy, so
+    it runs inside the consumer of the returned edges. Round-1 and round-2
+    edges are disjoint: a round-2 pair joins two round-1 components."""
+    from pyspark.storagelevel import StorageLevel
+
+    score = verify_scorer(pairs, signatures, cfg)
+    n_pairs, n_edges = Observation(), Observation()
+    round1 = (
+        score(pairs.observe(n_pairs, F.count("*").alias("n")))
+        .observe(n_edges, F.count("*").alias("n"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        # a Dataset action, so the observations complete; the no-op sink
+        # plans no aggregate, which adaptive execution would run as more jobs
+        round1.write.format("noop").mode("overwrite").save()
+        spark = pairs.sparkSession
+        scored, kept = _observed(spark, n_pairs), _observed(spark, n_edges)
+        if scored and scored == kept:
+            return round1, round1
+        labels, _ = connected_components_auto(round1)
+        round2 = score(cross_label_pairs(bands, labels, cfg))
+        return round1.union(round2), round1
+    except BaseException:
+        round1.unpersist()
+        raise
+
+
+def _observed(spark: SparkSession, obs: Observation) -> dict | None:
+    """An observation's values, without waiting: None when no action ran
+    it. An observation completes on the listener bus after its action, so
+    drain the bus first. Adaptive execution replaces a plan whose output
+    is empty by an empty relation and loses its metrics: that reads {}."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    done = obs._jo.future().value()  # Option[Try[Row]]
+    if done.isEmpty():
+        return None
+    row = done.get().get()
+    if row.length() == 0:
+        return {}
+    return {f: row.getAs(f) for f in row.schema().fieldNames()}
+
+
+def _stars(spark: SparkSession, stars: Observation) -> tuple[int | None, int | None]:
+    """(star_buckets, star_members) from the candidates observation, or
+    (None, None) when no action ran it. An observation that lost its
+    metrics to an empty pair table reads 0: an over-cap bucket always
+    yields pairs, so there was none."""
+    got = _observed(spark, stars)
+    if got is None:
+        return None, None
+    return got.get("star_buckets", 0), got.get("star_members", 0)
 
 
 def run_pipeline_flow(
@@ -181,15 +246,13 @@ def run_pipeline_flow(
     with a checkpoint store. The persisted stages are released before
     returning: both clustering paths return frames that no longer read
     them (a driver-built table, or local checkpoints the convergence test
-    has already materialized). Stage rows are not counted, and the
-    report's skew lineage reads None."""
+    has already materialized). Stage rows are not counted; the skew
+    lineage is observed as in a checkpointed run."""
     store = PersistStore()
     try:
-        clusters, report = run_pipeline(spark, pages, cfg, store=store)
+        return run_pipeline(spark, pages, cfg, store=store)
     finally:
         store.release()
-    report._star_thunk = None
-    return clusters, report
 
 
 def _sketch_stage(exact: DataFrame, cfg: PipelineConfig) -> DataFrame:

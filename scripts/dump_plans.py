@@ -25,7 +25,10 @@ def main() -> None:
     from mashing_pumpkins_spark.config import PipelineConfig, SketchConfig
     from mashing_pumpkins_spark.functions.classifier import demo_weight_table
     from mashing_pumpkins_spark.operators.banding import band_table
-    from mashing_pumpkins_spark.operators.candidates import candidate_pairs
+    from mashing_pumpkins_spark.operators.candidates import candidate_pairs, cross_label_pairs
+    from mashing_pumpkins_spark.operators.connected_components import (
+        connected_components_auto,
+    )
     from mashing_pumpkins_spark.operators.signature import sketch_table
     from mashing_pumpkins_spark.operators.corpus import (
         decontaminate,
@@ -53,6 +56,8 @@ def main() -> None:
     bands = band_table(sigs, cfg)
     pairs, _ = candidate_pairs(bands, cfg)
     edges = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=0)
+    round1_labels, _ = connected_components_auto(edges)
+    round2 = cross_label_pairs(bands, round1_labels, cfg)
     sub = substring_duplicate_pairs(pages, min_len=64, k=32, id_col="url", text_col="text")
     passages = passage_dedup_stats(pages, id_col="url", text_col="text")
     c_sigs, c_bands = index_tables(
@@ -187,22 +192,33 @@ def main() -> None:
             "— no Generate/posexplode node, no array column materialized.",
         ),
         (
-            "candidate pairs (skew-aware)",
+            "candidate pairs, round 1 (hub star per bucket)",
             pairs,
-            "Check (round-8 shape): ONE shuffle of the band table feeds the "
-            "spill-safe window (bucket size + hub); within-bucket pairing is "
-            "a collect_list + double explode on UNDER-CAP rows only, reusing "
-            "the window's (band_id,band_key) partitioning — no exchange "
-            "between Window and the pairing aggregate, every list bounded by "
-            "band_group_cap; over-cap buckets star-link row-by-row off the "
-            "hub (no list). The old within-bucket self-join (two more "
-            "exchanges) is gone; no CartesianProduct/BroadcastNestedLoopJoin "
-            "anywhere.",
+            "Check: ONE shuffle of the band table feeds the spill-safe "
+            "window (bucket size + hub); every member links to its bucket's "
+            "hub row by row, so no list materializes whatever the bucket "
+            "size; the over-cap lineage is a CollectMetrics node on the "
+            "window output (observed, no extra job); the pairs are deduped "
+            "across bands by one hash aggregate. No self-join, no "
+            "CartesianProduct/BroadcastNestedLoopJoin.",
         ),
         (
-            "verify (two-phase exact, join path forced)",
+            "candidate pairs, round 2 (cross-label pairing)",
+            round2,
+            "Check: the band table's window (bucket size + hub) keeps only "
+            "non-hub rows of under-cap buckets of >= 3 members; the round-1 "
+            "labels join in as a broadcast of the driver-built table; the "
+            "pairing is a collect_list + double explode that reuses the "
+            "window's (band_id,band_key) partitioning (no exchange between "
+            "Window and the pairing aggregate, every list bounded by "
+            "band_group_cap) and keeps only buckets whose members carry "
+            "more than one label, and only pairs across labels.",
+        ),
+        (
+            "verify (two-phase exact, join path forced; round-1 pairs)",
             edges,
-            "Check: prefilter joins carry slice(sig,1,64) — 512B/side, not "
+            "Check: the same scorer, decided once, scores both rounds' "
+            "pairs. Prefilter joins carry slice(sig,1,64) — 512B/side, not "
             "the full signature; the exact pass joins full sigs only for "
             "survivors; Jaccard runs in ArrowEvalPython (numpy), never "
             "Catalyst array_intersect with a C sorted-merge kernel scoring "

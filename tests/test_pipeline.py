@@ -157,9 +157,9 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 def test_flow_releases_its_persisted_stages(spark, corpus):
     """The flow persists its stages and releases them before returning:
-    on a driver-path corpus no cached RDD outlives the call, the returned
-    clusters still read, and the report neither counts stages nor holds a
-    lazy aggregate over the released stages."""
+    on a driver-path corpus no cached RDD outlives the call (the persisted
+    round-1 edges included), the returned clusters still read, and the
+    report counts no stages but reads the observed skew lineage."""
     pages_pd, _ = corpus
     pages = spark.createDataFrame(pages_pd.head(200))
     before = _persistent_rdd_ids(spark)
@@ -172,7 +172,8 @@ def test_flow_releases_its_persisted_stages(spark, corpus):
         "extract", "exact", "signatures", "bands", "candidates", "edges", "clusters"
     ]
     assert all(s["rows"] is None for s in d["stages"])
-    assert d["star_buckets"] is None and d["star_members"] is None
+    # observed, not skipped: no bucket of 200 pages exceeds the 2000 cap
+    assert d["star_buckets"] == 0 and d["star_members"] == 0
 
 
 def test_sketch_stage_partitions_without_a_job(spark, corpus, tmp_path):
@@ -340,6 +341,45 @@ def test_pipeline_skew_star_linking(spark, tmp_path_factory):
     assert len(assign) == 300
     assert len(set(assign.values())) == 1
     assert report.star_buckets > 0  # skew was detected and logged, not silent
+
+
+def test_star_metrics_are_observed_without_a_job(spark, tmp_path):
+    """The over-cap lineage is observed on round 1's band table: reading
+    the report runs no Spark job; a flow observes the same values; a
+    resumed candidates stage observed nothing and reads None."""
+    import pandas as pd
+
+    base = " ".join(f"w{i}" for i in range(300))
+    rows = {
+        "url": [f"https://hot.example/{i:04d}" for i in range(60)],
+        "text": [base + f" uniquetail{i} x{i}" for i in range(60)],
+    }
+    pages = spark.createDataFrame(pd.DataFrame(rows))
+    cfg = PipelineConfig(
+        sketch=CFG.sketch, n_bands=32, rows_per_band=8, band_group_cap=20
+    )
+    ckpt = str(tmp_path / "ck")
+    _, report = run_pipeline(spark, pages, cfg, ckpt)
+    sc = spark.sparkContext
+    group = "report_to_dict"
+    sc.setJobGroup(group, group)
+    try:
+        d = report.to_dict()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    # every band bucket of 60 near-identical pages holds more than 20
+    assert d["star_buckets"] > 0 and d["star_members"] > 20 * d["star_buckets"]
+    _, flow = run_pipeline_flow(spark, pages, cfg)
+    assert (flow.star_buckets, flow.star_members) == (
+        d["star_buckets"],
+        d["star_members"],
+    )
+    _, resumed = run_pipeline(spark, pages, cfg, ckpt)
+    assert resumed.stages[4].skipped
+    assert resumed.star_buckets is None and resumed.star_members is None
 
 
 def test_iceberg_store_requires_configured_catalog(spark):

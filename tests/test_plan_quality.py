@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from mashing_pumpkins_spark.config import PipelineConfig
 from mashing_pumpkins_spark.operators.banding import band_table
-from mashing_pumpkins_spark.operators.candidates import candidate_pairs
+from mashing_pumpkins_spark.operators.candidates import candidate_pairs, cross_label_pairs
+from mashing_pumpkins_spark.operators.connected_components import connected_components_auto
 from mashing_pumpkins_spark.operators.signature import sketch_table
 from mashing_pumpkins_spark.operators.verify import verified_edges
 from mashing_pumpkins_spark.sources.synthetic import generate_pages
@@ -23,10 +24,12 @@ def plan_frames(spark):
     bands = band_table(sigs, cfg)
     pairs, _ = candidate_pairs(bands, cfg)
     edges = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=0)
-    return {"bands": bands, "pairs": pairs, "edges": edges}
+    labels, _ = connected_components_auto(edges)
+    round2 = cross_label_pairs(bands, labels, cfg)
+    return {"bands": bands, "pairs": pairs, "edges": edges, "round2": round2}
 
 
-@pytest.mark.parametrize("name", ["bands", "pairs", "edges"])
+@pytest.mark.parametrize("name", ["bands", "pairs", "edges", "round2"])
 def test_no_cartesian_product(plan_frames, name):
     plan = plan_frames[name]._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, name
@@ -47,14 +50,22 @@ def test_forced_verify_join_path_never_broadcasts(plan_frames):
 
 
 def test_band_pairing_is_bucket_keyed_and_memory_bounded(plan_frames):
+    # Round 1 (the candidates stage): the size/hub annotation is a
+    # spill-safe Window keyed by (band_id, band_key), and every member
+    # links to the window hub row by row, so no list materializes at all.
+    # The old within-bucket SELF-JOIN (two further exchanges of the band
+    # table) must not come back in either round.
     plan = plan_frames["pairs"]._jdf.queryExecution().executedPlan().toString()
-    # round-8 shape: the size/hub annotation is a spill-safe Window keyed
-    # by (band_id, band_key); within-bucket pairing is a collect_list +
-    # double explode on UNDER-CAP rows only, reusing the window's
-    # partitioning and sort (no exchange between them, every list bounded
-    # by band_group_cap); over-cap buckets star-link row-by-row off the
-    # window hub. The old within-bucket SELF-JOIN (two further exchanges
-    # of the band table) must not come back.
+    assert "Exchange hashpartitioning(band_id" in plan
+    assert "Window" in plan
+    assert "collect_list" not in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    # Round 2: the cross-label pairing is a collect_list + double explode
+    # on under-cap, non-hub rows only, reusing the window's partitioning
+    # and sort (no exchange between them, every list bounded by
+    # band_group_cap); the labels join in on the driver-built table as a
+    # broadcast.
+    plan = plan_frames["round2"]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning(band_id" in plan
     assert "Window" in plan
     assert "collect_list" in plan

@@ -5,14 +5,17 @@ prefix)."""
 
 from __future__ import annotations
 
+import functools
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from mashing_pumpkins_spark.config import PipelineConfig, SketchConfig
+from mashing_pumpkins_spark.operators.candidates import candidate_pairs
 from mashing_pumpkins_spark.operators.signature import sketch_table
-from mashing_pumpkins_spark.operators.verify import verified_edges
+from mashing_pumpkins_spark.operators.verify import verified_edges, verify_scorer
+from mashing_pumpkins_spark.plans import pipeline
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +83,58 @@ def test_broadcast_and_join_paths_agree(spark, docs_and_pairs, maxsize, strategy
     assert got.keys() == want.keys()
     assert all(abs(got[k] - want[k]) < 1e-9 for k in want)
     assert len(got) > 5  # fixture actually plants verifiable pairs
+
+
+def _caps(sigs, cfg) -> dict[str, int]:
+    """Broadcast caps forcing each strategy when every url is a candidate:
+    8 B per value plus a start and a length per row."""
+    lens = [len(r["sig"]) for r in sigs.collect()]
+    prefix_bytes = 8 * (sum(min(n, cfg.prefilter_k) for n in lens) + 2 * len(lens))
+    full_bytes = 8 * (sum(lens) + 2 * len(lens))
+    return {"broadcast": full_bytes, "prefix_broadcast": prefix_bytes, "join": 0}
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "prefix_broadcast", "join"])
+def test_scorer_on_a_second_pair_table_matches_verified_edges(
+    spark, docs_and_pairs, strategy
+):
+    """A scorer built on one pair table and applied to another (whose urls
+    are in the first one's slice) keeps the first table's strategy and
+    returns the rows verified_edges returns for the second table."""
+    docs, pairs = docs_and_pairs
+    cfg = PipelineConfig(
+        sketch=SketchConfig(nsize=21, maxsize=1000, hash_name="xxh64", seed=0),
+        jaccard_threshold=0.5,
+    )
+    sigs = sketch_table(docs, cfg.sketch)
+    cap = _caps(sigs, cfg)[strategy]
+    second = pairs.where((F.col("url_a") >= "u010") & (F.col("url_b") < "u045"))
+    scored = verify_scorer(pairs, sigs, cfg, broadcast_cap_bytes=cap)(second)
+    assert _verify_strategy(scored) == strategy
+    got = sorted((r["url_a"], r["url_b"], r["jaccard"]) for r in scored.collect())
+    want = sorted(
+        (r["url_a"], r["url_b"], r["jaccard"])
+        for r in verified_edges(second, sigs, cfg, broadcast_cap_bytes=cap).collect()
+    )
+    assert got == want and len(got) > 5
+
+
+def test_broadcast_scoring_raises_on_a_url_missing_from_the_slice(spark, docs_and_pairs):
+    """A pair whose url has no row in the broadcast slice raises instead of
+    scoring 0 and dropping the pair silently."""
+    docs, pairs = docs_and_pairs
+    cfg = PipelineConfig(
+        sketch=SketchConfig(nsize=21, maxsize=256, hash_name="xxh64", seed=0),
+        jaccard_threshold=0.5,
+    )
+    sigs = sketch_table(docs, cfg.sketch)
+    unknown = spark.createDataFrame([("u001", "zz-unknown")], "url_a string, url_b string")
+    with pytest.raises(Exception, match="zz-unknown"):
+        verified_edges(pairs.union(unknown), sigs, cfg, broadcast_cap_bytes=1 << 40).collect()
+    score = verify_scorer(pairs.where(F.col("url_b") < "u030"), sigs, cfg, 1 << 40)
+    outside = spark.createDataFrame([("u001", "u050")], "url_a string, url_b string")
+    with pytest.raises(Exception, match="u050"):
+        score(outside).collect()
 
 
 def test_prefilter_k_knob_same_edges(spark, docs_and_pairs):
@@ -155,11 +210,12 @@ def _queries_in_group(spark, group: str) -> list[str]:
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
-def test_verify_dispatch_is_one_aggregate(spark, docs_and_pairs, broadcast):
+def test_verify_dispatch_is_one_aggregate(spark, docs_and_pairs, broadcast, monkeypatch):
     """Choosing the strategy costs exactly one query, the aggregate over
     the candidate slice. The broadcast path adds only the slice collect;
     the join path adds nothing eager. A return to separate count or probe
-    jobs fails."""
+    jobs fails. The edges stage makes that one decision for both verify
+    rounds."""
     docs, pairs = docs_and_pairs
     cfg = PipelineConfig(
         sketch=SketchConfig(nsize=21, maxsize=1000, hash_name="xxh64", seed=0),
@@ -178,3 +234,29 @@ def test_verify_dispatch_is_one_aggregate(spark, docs_and_pairs, broadcast):
     plans = _queries_in_group(spark, group)
     assert len(plans) == (2 if broadcast else 1)
     assert "least(size(sig" in plans[0]  # the dispatch aggregate comes first
+
+    # The edges stage: one dispatch aggregate serves both rounds. Every doc
+    # shares one band bucket, so round 2 pairs the members round 1 left in
+    # different components.
+    bands = sigs.select("url", F.lit(0).alias("band_id"), F.lit(7).cast("bigint").alias("band_key"))
+    rounds_cfg = PipelineConfig(sketch=cfg.sketch, jaccard_threshold=0.5, band_group_cap=100)
+    pairs1, _ = candidate_pairs(bands, rounds_cfg)
+    pairs1 = pairs1.localCheckpoint()
+    cap = (1 << 40) if broadcast else 0
+    monkeypatch.setattr(
+        pipeline, "verify_scorer", functools.partial(verify_scorer, broadcast_cap_bytes=cap)
+    )
+    group = f"edges_stage_{broadcast}"
+    sc.setJobGroup(group, group)
+    try:
+        edges, round1 = pipeline.verified_rounds(pairs1, bands, sigs, rounds_cfg)
+        got = {(r["url_a"], r["url_b"]) for r in edges.collect()}
+        round1.unpersist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plans = _queries_in_group(spark, group)
+    assert sum("least(size(sig" in p for p in plans) == 1
+    # both rounds were scored: the edges of the 30 near-dups reach beyond
+    # the hub u000's star
+    assert any("u000" not in e for e in got)
