@@ -9,18 +9,26 @@ unsigned order by construction (functions/sketch_np.bottomk/topk), so a
 scalar C two-pointer merge touches each element once with zero per-pair
 Python work: one ctypes call scores a whole Arrow batch.
 
+One entry point, `intersect_counts_indexed`: pairs (ia[p], ib[p]) of rows
+of ONE shared (values, starts, lens) layout — the layout
+operators/signature.list_layout reads out of an Arrow list column. Its
+only caller is operators/verify._jaccard, which scores every Jaccard in
+the package (the broadcast scan over the collected slice, and the join
+path's Arrow UDF over both signature columns laid out as one buffer).
+
 Same escape-hatch pattern as operators/_jpeg_cext.py / _png_cext.py /
 hashkernels/_hash_cext.py: dependency-free C99 compiled on first use via
 _cext_build, ctypes, and a None fallback that keeps the numpy path —
 results bit-identical either way. Kill switch: MP_SPARK_INTERSECT_CEXT=0.
 
 Correctness on arbitrary inputs: the merge requires sorted-unique arrays,
-so callers pair the kernel with `violating_rows()` — a vectorized scan
+so `_jaccard` pairs the kernel with `violating_rows()` — a vectorized scan
 that flags every array with a non-increasing adjacent pair (unsorted OR
-duplicate values) — and re-score flagged rows with np.intersect1d. For
-sketch-shaped inputs the flag set is empty and the whole batch stays in
-C; for adversarial inputs behavior degrades to exactly the old numpy
-semantics.
+duplicate values); verify computes it once per broadcast slice
+(_collect_slice_flat) or per UDF batch — and re-scores flagged rows with
+np.intersect1d. For sketch-shaped inputs the flag set is empty and the
+whole batch stays in C; for adversarial inputs behavior degrades to
+exactly the numpy semantics.
 """
 
 from __future__ import annotations
@@ -59,28 +67,6 @@ void intersect_count_indexed(
     }
 }
 
-/* Same merge over two independent (values, offsets) list layouts — the
-   Arrow ListArray shape of a UDF batch. offsets have n+1 entries. */
-void intersect_count_ab(
-    const uint64_t *avals, const int64_t *aoffs,
-    const uint64_t *bvals, const int64_t *boffs,
-    int64_t n, int64_t *out)
-{
-    for (int64_t p = 0; p < n; p++) {
-        const uint64_t *a = avals + aoffs[p];
-        const uint64_t *b = bvals + boffs[p];
-        int64_t la = aoffs[p + 1] - aoffs[p];
-        int64_t lb = boffs[p + 1] - boffs[p];
-        int64_t x = 0, y = 0, c = 0;
-        while (x < la && y < lb) {
-            uint64_t av = a[x], bv = b[y];
-            c += (av == bv);
-            x += (av <= bv);
-            y += (bv <= av);
-        }
-        out[p] = c;
-    }
-}
 """
 
 
@@ -91,10 +77,6 @@ def _bind(lib: ctypes.CDLL) -> None:
         p_u64, p_i64, p_i64, p_i64, p_i64, ctypes.c_int64, p_i64,
     ]
     lib.intersect_count_indexed.restype = None
-    lib.intersect_count_ab.argtypes = [
-        p_u64, p_i64, p_u64, p_i64, ctypes.c_int64, p_i64,
-    ]
-    lib.intersect_count_ab.restype = None
 
 
 load = kernel_loader(_C_SOURCE, "intersect", "MP_SPARK_INTERSECT_CEXT", _bind)
@@ -118,8 +100,7 @@ def violating_rows(
     order (unsorted or duplicate values) — the rows the C merge may not
     score. Vectorized: one diff over the flat buffer, boundary positions
     masked out via searchsorted attribution. ``starts`` must be
-    nondecreasing (arrays laid out in order — the Arrow/concatenate
-    layout both callers build)."""
+    nondecreasing (arrays laid out in order, as list_layout returns them)."""
     u = _as_u64(vals)
     if u.shape[0] < 2:
         return np.empty(0, dtype=np.int64)
@@ -160,27 +141,3 @@ def intersect_counts_indexed(
         )
     return out
 
-
-def intersect_counts_ab(
-    avals: np.ndarray,
-    aoffs: np.ndarray,
-    bvals: np.ndarray,
-    boffs: np.ndarray,
-) -> "np.ndarray | None":
-    """Counts for row-aligned list layouts (offsets n+1); None when the C
-    kernel is unavailable."""
-    lib = load()
-    if lib is None:
-        return None
-    n = aoffs.shape[0] - 1
-    out = np.empty(n, dtype=np.int64)
-    if n:
-        lib.intersect_count_ab(
-            _p(_as_u64(avals), ctypes.c_uint64),
-            _p(np.ascontiguousarray(aoffs, dtype=np.int64), ctypes.c_int64),
-            _p(_as_u64(bvals), ctypes.c_uint64),
-            _p(np.ascontiguousarray(boffs, dtype=np.int64), ctypes.c_int64),
-            n,
-            _p(out, ctypes.c_int64),
-        )
-    return out

@@ -25,11 +25,15 @@ pairs at tau=0.7 and wasted 2.3x candidates at tau=0.9 — sweep table in
 BENCH/BASELINE.md). The end-to-end recall tests (tests/test_pipeline.py)
 assert >=0.99 under both the adaptive default and the explicit 32x8.
 
-Physical plan: ONE vectorized pandas UDF computes the m component minima
-(numpy reduceat over the batch's flattened sigs) AND folds each r-run into
-a 64-bit band key (fmix64 + FNV-style polynomial fold), emitting b keys per
-doc — b-element arrays instead of m-element ones keeps Arrow transfer and
-the JVM explode small. The explode + shuffle-by-key stay JVM-side.
+Physical plan: every signature column is read zero-copy through
+signature.list_layout; _band_keys_from_values computes each doc's m
+component minima in the C kernel band_minima_c (numpy reduceat when it is
+unavailable) and folds each r-run into a 64-bit band key (fmix64 +
+FNV-style polynomial fold), b keys per doc. band_table (mapInArrow)
+emits the exploded (url, band_id, band_key) rows directly;
+make_band_keys_udf (an Arrow UDF, for the streaming path) returns the b
+keys as one array per doc, b-element arrays instead of m-element ones
+keeping the JVM explode small.
 """
 
 from __future__ import annotations
@@ -37,12 +41,19 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from ..config import PipelineConfig
+from .signature import list_layout
 
 _FMIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _FMIX2 = np.uint64(0xC4CEB9FE1A85EC53)
@@ -69,51 +80,40 @@ def _fmix64(k: np.ndarray) -> np.ndarray:
 
 
 def make_band_keys_udf(cfg: PipelineConfig):
-    """pandas UDF: sig array<bigint> -> array<bigint> of n_bands band keys.
+    """Arrow UDF: sig array<bigint> -> array<bigint> of n_bands band keys.
 
     Empty/short signatures yield an empty array (no bands emitted).
-    Same kernel as band_table (_band_keys_from_values), so streaming and
-    batch band keys are identical by construction.
+    Same layout and kernel as band_table (_band_keys_from_values), so
+    streaming and batch band keys are identical by construction
+    (tests/test_band_key_parity.py pins it).
     """
+    n_bands = cfg.n_bands
+    key_type = pa.list_(pa.field("element", pa.int64(), nullable=False))
 
-    @F.pandas_udf(ArrayType(LongType(), containsNull=False))
-    def band_keys_udf(sig_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for sigs in sig_iter:
-            n = len(sigs)
-            lens = np.fromiter(
-                (0 if s is None else len(s) for s in sigs),
-                dtype=np.int64,
-                count=n,
-            )
-            if lens.sum() == 0:
-                yield pd.Series([[]] * n)
-                continue
-            flat = np.concatenate(
-                [
-                    np.asarray(s, dtype=np.int64)
-                    for s in sigs
-                    if s is not None and len(s)
-                ]
-            ).view(np.uint64)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            nonzero, keys = _band_keys_from_values(flat, starts, lens, cfg)
-            out: list = [[]] * n
-            for row_idx, out_idx in enumerate(nonzero):
-                out[int(out_idx)] = keys[row_idx]
-            yield pd.Series(out)
+    @F.arrow_udf(ArrayType(LongType(), containsNull=False))
+    def band_keys_udf(sig: pa.Array) -> pa.Array:
+        vals, starts, lens = list_layout(sig)
+        nonzero, keys = _band_keys_from_values(vals, starts, lens, cfg)
+        counts = np.zeros(len(sig), dtype=np.int32)
+        counts[nonzero] = n_bands
+        offsets = np.zeros(len(sig) + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(keys.ravel()), type=key_type
+        )
 
     return band_keys_udf
 
 
 def _band_keys_from_values(
-    values_u64: np.ndarray,
+    values: np.ndarray,
     starts: np.ndarray,
     lens: np.ndarray,
     cfg: PipelineConfig,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(nonempty_row_indices, keys int64[n_nonempty, n_bands]) from the
-    concatenated signature values of a batch (shared by the pandas UDF and
-    the Arrow band_table)."""
+    list_layout of a batch's signature column (shared by the Arrow UDF and
+    band_table)."""
     a_params, b_params = _band_params(cfg)
     n_bands, r = cfg.n_bands, cfg.rows_per_band
     m = n_bands * r
@@ -125,6 +125,8 @@ def _band_keys_from_values(
     k_nz = keep[nonzero]
     n_ne = nonzero.shape[0]
     from ..hashkernels import _hash_cext
+
+    values_u64 = values.view(np.uint64)
 
     # C fast path (round 8): per-doc multiply-shift minima with the doc's
     # <= band_input_k values L1-resident — the numpy reduceat formulation
@@ -159,17 +161,13 @@ def band_table(
 ) -> DataFrame:
     """signatures(url, sig) -> bands(url, band_id, band_key).
 
-    mapInArrow end to end: signature values are read zero-copy out of the
-    Arrow ListArray (values + offsets), the m component minima of the whole
-    batch run as numpy reduceat passes, and the exploded (url, band_id,
-    band_key) rows are emitted directly — no per-doc Python lists in, no
-    array column + posexplode on the JVM side out. Docs with empty
-    signatures emit no rows (same as the old explode)."""
-    import pyarrow as pa
-    from typing import Iterator as _Iter
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    mapInArrow end to end: signature values are read zero-copy through
+    list_layout, the m component minima of the whole batch run in the C
+    band_minima_c kernel (numpy reduceat when it is unavailable), and the
+    exploded (url, band_id, band_key) rows are emitted directly — no
+    per-doc Python lists in, no array column + posexplode on the JVM side
+    out. Docs with empty signatures emit no rows (same as the old
+    explode)."""
     n_bands = cfg.n_bands
     src = signatures.select(url_col, "sig")
     out_schema = StructType(
@@ -181,19 +179,10 @@ def band_table(
     )
     band_id_tile = np.arange(n_bands, dtype=np.int32)
 
-    def compute(batches: _Iter[pa.RecordBatch]) -> _Iter[pa.RecordBatch]:
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             urls = rb.column(0)
-            col = rb.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offs = np.asarray(col.offsets, dtype=np.int64)
-            vals = np.asarray(col.values, dtype=np.int64).view(np.uint64)
-            starts = offs[:-1]
-            lens = offs[1:] - starts
-            if col.null_count:
-                lens = np.where(np.asarray(col.is_valid()), lens, 0)
-            nonzero, keys = _band_keys_from_values(vals, starts, lens, cfg)
+            nonzero, keys = _band_keys_from_values(*list_layout(rb.column(1)), cfg)
             n_ne = nonzero.shape[0]
             out_urls = urls.take(
                 pa.array(np.repeat(nonzero, n_bands), type=pa.int64())

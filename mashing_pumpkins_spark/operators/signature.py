@@ -20,6 +20,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -109,8 +110,6 @@ def _string_array_as_buffer(arr) -> tuple:
     objects, no encode, no join: the concatenated UTF-8 bytes ALREADY live
     contiguously in the Arrow data buffer. Null rows get length 0 (their
     windows are never emitted)."""
-    import pyarrow as pa
-
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     t = arr.type
@@ -134,6 +133,24 @@ def _string_array_as_buffer(arr) -> tuple:
     return data, starts, lens
 
 
+def list_layout(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Zero-copy view of a pyarrow list<int64> array (a signature column)
+    as (values int64[], starts int64[], lens int64[]): row i is
+    values[starts[i] : starts[i] + lens[i]].
+
+    Reads the child values buffer with the absolute offsets, so a sliced
+    array needs no copy and starts stay nondecreasing (what
+    _intersect_cext.violating_rows requires). Null rows get length 0."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offsets = np.asarray(arr.offsets, dtype=np.int64)
+    starts = offsets[:-1]
+    lens = offsets[1:] - starts
+    if arr.null_count:
+        lens = np.where(np.asarray(arr.is_valid()), lens, 0)
+    return np.asarray(arr.values, dtype=np.int64), starts, lens
+
+
 def sketch_table(
     pages: DataFrame,
     cfg: SketchConfig,
@@ -152,8 +169,6 @@ def sketch_table(
     Narrow select BEFORE the UDF so the Parquet scan reads only two columns
     (check `.explain`: ReadSchema must not include html/lang/warc_ts).
     """
-    import pyarrow as pa
-
     from ..functions.sketch_np import signatures_from_buffer
 
     src = pages.select(url_col, text_col)

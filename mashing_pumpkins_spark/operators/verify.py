@@ -38,96 +38,78 @@ round-2 url is a member of a round-1 pair, so it is in round 1's slice,
 and a broadcast scorer raises on a url that is not. `verified_edges` is
 the scorer of a pair table applied to that table.
 
-Scoring is the C sorted-merge intersect kernel (operators/_intersect_cext)
-over a whole Arrow batch per call, with np.intersect1d for rows that are
-not sorted-unique and when the kernel is unavailable: results are
-bit-identical either way.
+Scoring is one function, `_jaccard`: the C sorted-merge intersect kernel
+(operators/_intersect_cext) over row pairs of one (values, starts, lens)
+layout, with np.intersect1d only for rows that are not sorted-unique and
+when the kernel is unavailable — results are bit-identical either way.
+Every signature column reaches it through signature.list_layout: the
+broadcast paths lay out the collected slice once, and the join paths'
+Arrow UDF lays out both columns of a batch as one buffer.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator, Tuple
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..config import PipelineConfig
 from . import _intersect_cext
-
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
-
-def _flat_layout(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(flat int64 values, offsets[n+1], lens) for a Series/sequence of
-    int64 arrays (None -> empty). One concatenate, no per-row numpy calls
-    beyond the asarray coercion pandas already made."""
-    arrays = [
-        _EMPTY_I64 if a is None else np.asarray(a, dtype=np.int64) for a in col
-    ]
-    lens = np.fromiter((a.shape[0] for a in arrays), np.int64, len(arrays))
-    offs = np.zeros(len(arrays) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    flat = np.concatenate(arrays) if arrays else _EMPTY_I64
-    return flat, offs, lens
+from .signature import list_layout
 
 
-def _pair_jaccard_block(
-    aflat: np.ndarray,
-    aoffs: np.ndarray,
-    alens: np.ndarray,
-    bflat: np.ndarray,
-    boffs: np.ndarray,
-    blens: np.ndarray,
+def _jaccard(
+    vals: np.ndarray,
+    starts: np.ndarray,
+    lens: np.ndarray,
+    viol: np.ndarray,
+    ia: np.ndarray,
+    ib: np.ndarray,
 ) -> np.ndarray:
-    """Row-aligned exact Jaccard over two list layouts: C sorted-merge for
-    the (overwhelmingly common) sorted-unique sketch rows, np.intersect1d
-    for any row the sortedness scan flags — bit-identical to the per-pair
-    numpy loop on every input."""
-    n = alens.shape[0]
-    inter = _intersect_cext.intersect_counts_ab(aflat, aoffs, bflat, boffs)
+    """Exact Jaccard of the row pairs (ia[p], ib[p]) of one list layout
+    (row i is vals[starts[i] : starts[i] + lens[i]]). The C sorted-merge
+    scores every pair; np.intersect1d re-scores the pairs that touch a
+    ``viol`` row (violating_rows of the layout), or every pair when the
+    kernel is unavailable. An empty row scores 0."""
+    inter = _intersect_cext.intersect_counts_indexed(vals, starts, lens, ia, ib)
     if inter is None:
-        inter = np.zeros(n, dtype=np.int64)
-        for i in range(n):
-            xa = aflat[aoffs[i] : aoffs[i + 1]]
-            yb = bflat[boffs[i] : boffs[i + 1]]
-            if xa.shape[0] and yb.shape[0]:
-                inter[i] = np.intersect1d(
-                    xa, yb, assume_unique=True
-                ).shape[0]
+        inter = np.zeros(ia.shape[0], dtype=np.int64)
+        redo = range(ia.shape[0])
     else:
-        bad = np.union1d(
-            _intersect_cext.violating_rows(aflat, aoffs[:-1], alens),
-            _intersect_cext.violating_rows(bflat, boffs[:-1], blens),
-        )
-        for i in bad:
-            xa = aflat[aoffs[i] : aoffs[i + 1]]
-            yb = bflat[boffs[i] : boffs[i + 1]]
-            inter[i] = (
-                np.intersect1d(xa, yb, assume_unique=True).shape[0]
-                if xa.shape[0] and yb.shape[0]
-                else 0
-            )
-    out = np.zeros(n, dtype=np.float64)
-    ok = (alens > 0) & (blens > 0)
-    union = alens + blens - inter
-    out[ok] = inter[ok] / union[ok]
+        redo = np.flatnonzero(np.isin(ia, viol) | np.isin(ib, viol))
+    for p in redo:
+        i, j = ia[p], ib[p]
+        inter[p] = np.intersect1d(
+            vals[starts[i] : starts[i] + lens[i]],
+            vals[starts[j] : starts[j] + lens[j]],
+            assume_unique=True,
+        ).shape[0]
+    la = lens[ia]
+    lb = lens[ib]
+    out = np.zeros(ia.shape[0], dtype=np.float64)
+    ok = (la > 0) & (lb > 0)
+    out[ok] = inter[ok] / (la + lb - inter)[ok]
     return out
 
 
-@F.pandas_udf(DoubleType())
-def _jaccard_udf(
-    pairs: Iterator[Tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    for a_col, b_col in pairs:
-        aflat, aoffs, alens = _flat_layout(a_col)
-        bflat, boffs, blens = _flat_layout(b_col)
-        yield pd.Series(
-            _pair_jaccard_block(aflat, aoffs, alens, bflat, boffs, blens)
-        )
+@F.arrow_udf(DoubleType())
+def _jaccard_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Row-aligned exact Jaccard of two signature columns: both laid out as
+    one buffer, row i of ``a`` paired with row n + i (row i of ``b``)."""
+    a_vals, a_starts, a_lens = list_layout(a)
+    b_vals, b_starts, b_lens = list_layout(b)
+    vals = np.concatenate([a_vals, b_vals])
+    starts = np.concatenate([a_starts, b_starts + a_vals.shape[0]])
+    lens = np.concatenate([a_lens, b_lens])
+    viol = _intersect_cext.violating_rows(vals, starts, lens)
+    ia = np.arange(len(a), dtype=np.int64)
+    return pa.array(_jaccard(vals, starts, lens, viol, ia, ia + len(a)))
 
 
 def _join_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
@@ -154,34 +136,14 @@ def _collect_slice_flat(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict, np.ndarray]:
     """A candidate signature slice as one flat layout: collect ONCE via
     Arrow (toArrow — no row-pickle path, ~10x the old toPandas dict build
-    at a 100 MB slice), and expose the Arrow ListArray's own (values,
-    offsets) buffers as (flat int64 values, starts, lens, url -> row index,
-    violating rows). The flat layout is what gets broadcast: one ndarray +
-    a str->int dict pickles far faster than a dict of 10^5 small ndarrays."""
-    tbl = sl.toArrow().combine_chunks()
-    n = tbl.num_rows
-    if n == 0:
-        flat, starts, lens = _EMPTY_I64, _EMPTY_I64, _EMPTY_I64
-        idx: dict = {}
-    else:
-        sig_arr = tbl.column("sig").chunk(0)
-        if sig_arr.null_count:
-            # never produced by sketch_table; per-row build keeps the
-            # None -> empty semantics of the old dict path
-            rows = [
-                _EMPTY_I64 if s is None else np.asarray(s, dtype=np.int64)
-                for s in sig_arr.to_pylist()
-            ]
-            flat, offs, lens = _flat_layout(rows)
-            starts = offs[:-1]
-        else:
-            offs = np.asarray(sig_arr.offsets).astype(np.int64)
-            flat = np.asarray(sig_arr.flatten(), dtype=np.int64)
-            starts = offs[:-1] - offs[0]
-            lens = np.diff(offs)
-        idx = {u: i for i, u in enumerate(tbl.column("url").to_pylist())}
-    viol = _intersect_cext.violating_rows(flat, starts, lens)
-    return flat, starts, lens, idx, viol
+    at a 100 MB slice), and expose the sig column's list_layout as (flat
+    int64 values, starts, lens, url -> row index, violating rows). The
+    flat layout is what gets broadcast: one ndarray + a str->int dict
+    pickles far faster than a dict of 10^5 small ndarrays."""
+    tbl = sl.toArrow()
+    vals, starts, lens = list_layout(tbl.column("sig"))
+    idx = {u: i for i, u in enumerate(tbl.column("url").to_pylist())}
+    return vals, starts, lens, idx, _intersect_cext.violating_rows(vals, starts, lens)
 
 
 def _broadcast_score(
@@ -193,8 +155,7 @@ def _broadcast_score(
     """Shared broadcast scoring pass: the collected signature slice ``bc``
     (a broadcast of _collect_slice_flat) rides to every task as a flat
     buffer, the pair table streams through ONE mapInPandas (zero join
-    shuffles), and each batch is scored by the C sorted-merge kernel (numpy
-    per-pair fallback, bit-identical — see _pair_jaccard_block). With
+    shuffles), and each batch is scored by _jaccard. With
     emit_jaccard this IS the verify stage; without it it is the phase-1
     prefix prefilter (same float predicate either way). A url missing from
     the slice raises: scoring it as 0 would drop a pair silently."""
@@ -226,28 +187,7 @@ def _broadcast_score(
                 raise KeyError(
                     f"url {url!r} of a verify pair is not in the broadcast signature slice"
                 )
-            inter = _intersect_cext.intersect_counts_indexed(vals, st, ln, ia, ib)
-            la = ln[ia]
-            lb = ln[ib]
-            redo = None
-            if inter is None:
-                redo = range(n)
-                inter = np.zeros(n, dtype=np.int64)
-            elif viol.size:
-                redo = np.flatnonzero(np.isin(ia, viol) | np.isin(ib, viol))
-            if redo is not None:
-                for i in redo:
-                    xa = vals[st[ia[i]] : st[ia[i]] + ln[ia[i]]]
-                    yb = vals[st[ib[i]] : st[ib[i]] + ln[ib[i]]]
-                    inter[i] = (
-                        np.intersect1d(xa, yb, assume_unique=True).shape[0]
-                        if xa.shape[0] and yb.shape[0]
-                        else 0
-                    )
-            jac = np.zeros(n, dtype=np.float64)
-            ok = (la > 0) & (lb > 0)
-            union = la + lb - inter
-            jac[ok] = inter[ok] / union[ok]
+            jac = _jaccard(vals, st, ln, viol, ia, ib)
             keep = jac >= threshold
             if emit_jaccard:
                 yield pd.DataFrame(

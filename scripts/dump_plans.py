@@ -220,9 +220,10 @@ def main() -> None:
             "Check: the same scorer, decided once, scores both rounds' "
             "pairs. Prefilter joins carry slice(sig,1,64) — 512B/side, not "
             "the full signature; the exact pass joins full sigs only for "
-            "survivors; Jaccard runs in ArrowEvalPython (numpy), never "
-            "Catalyst array_intersect with a C sorted-merge kernel scoring "
-            "each Arrow batch (numpy fallback bit-identical). (Round-8: "
+            "survivors; Jaccard runs in ArrowEvalPython (the _jaccard_udf "
+            "Arrow UDF: both signature columns read zero-copy, one C "
+            "sorted-merge call per Arrow batch, numpy fallback "
+            "bit-identical), never Catalyst array_intersect. (Round-8: "
             "when the candidate slice fits the 160MB broadcast cap — by "
             "the maxsize bound, the counted url set, or the actual-bytes "
             "probe for untruncated configs — verify instead runs as ONE "

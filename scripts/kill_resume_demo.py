@@ -38,6 +38,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.environ.get("KR_WORKDIR", "/tmp/kill_resume")
 N_PAGES = int(os.environ.get("KR_PAGES", "300000"))
 CPUS = int(os.environ.get("KR_CPUS", "16"))
+# the --py-files zip is a build product: built from the source tree into
+# the work dir on every run, never read from the checkout
+PYFILES_ZIP = os.path.join(WORK, "pyfiles", "mashing_pumpkins_spark.zip")
 
 
 def cli_cmd(out_dir: str, ckpt_dir: str, corpus: str) -> list[str]:
@@ -54,7 +57,7 @@ def cli_cmd(out_dir: str, ckpt_dir: str, corpus: str) -> list[str]:
         "--conf",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize=4m",
         "--py-files",
-        os.path.join(REPO, "mashing_pumpkins_spark.zip"),
+        PYFILES_ZIP,
         os.path.join(REPO, "scripts/run_curation.py"),
         "--docs",
         corpus,
@@ -98,7 +101,10 @@ def manifest_snapshot(ckpt_dir: str, stages: list[str]) -> dict:
 
 
 def main() -> int:
-    os.makedirs(WORK, exist_ok=True)
+    os.makedirs(os.path.dirname(PYFILES_ZIP), exist_ok=True)
+    subprocess.run(
+        [os.path.join(REPO, "scripts/make_pyfiles_zip.sh"), PYFILES_ZIP], check=True
+    )
     corpus_dir = os.path.join(WORK, f"pages_{N_PAGES}")
     corpus = os.path.join(corpus_dir, "pages.parquet")
     if not os.path.exists(corpus):

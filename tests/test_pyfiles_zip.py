@@ -1,40 +1,36 @@
-"""The committed spark-submit deployment zip must track the source tree.
+"""The spark-submit --py-files zip is a build product of the source tree,
+not a committed file: scripts/make_pyfiles_zip.sh must build a zip that a
+bare interpreter (no PYTHONPATH, not run from the checkout) imports the
+library from — the same resolution an executor does with --py-files."""
 
-Round-5 ADVICE: the zip went stale — 8 new modules missing, 10 files
-differing (executors silently ran pre-fix code). This test makes staleness
-a CI failure: every .py under mashing_pumpkins_spark/ must be present in
-the zip with identical bytes, and the zip must contain nothing extra.
-Regenerate with scripts/make_pyfiles_zip.sh."""
-
+import os
 import pathlib
-import zipfile
+import subprocess
+import sys
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
-ZIP = REPO / "mashing_pumpkins_spark.zip"
-PKG = REPO / "mashing_pumpkins_spark"
 
 
-def _tree_files() -> dict[str, bytes]:
-    out = {}
-    for p in sorted(PKG.rglob("*")):
-        if p.is_dir() or "__pycache__" in p.parts:
-            continue
-        out[str(p.relative_to(REPO))] = p.read_bytes()
-    return out
-
-
-def test_pyfiles_zip_matches_source_tree():
-    assert ZIP.exists(), "mashing_pumpkins_spark.zip missing — run scripts/make_pyfiles_zip.sh"
-    tree = _tree_files()
-    with zipfile.ZipFile(ZIP) as z:
-        zipped = {
-            n: z.read(n)
-            for n in z.namelist()
-            if not n.endswith("/") and "__pycache__" not in n
-        }
-    missing = sorted(set(tree) - set(zipped))
-    extra = sorted(set(zipped) - set(tree))
-    assert not missing, f"zip is stale — missing from zip: {missing}; run scripts/make_pyfiles_zip.sh"
-    assert not extra, f"zip has files not in the tree: {extra}; run scripts/make_pyfiles_zip.sh"
-    stale = sorted(n for n in tree if tree[n] != zipped[n])
-    assert not stale, f"zip contents differ from source: {stale}; run scripts/make_pyfiles_zip.sh"
+def test_pyfiles_zip_builds_and_imports_from_zip(tmp_path):
+    zpath = tmp_path / "mashing_pumpkins_spark.zip"
+    subprocess.run(
+        ["sh", str(REPO / "scripts" / "make_pyfiles_zip.sh"), str(zpath)],
+        check=True,
+        capture_output=True,
+    )
+    assert zpath.is_file()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    probe = (
+        "import sys; sys.path.insert(0, sys.argv[1]); "
+        "import mashing_pumpkins_spark.operators.verify as m; print(m.__file__)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(zpath)],
+        cwd=tmp_path,
+        env=env,
+        check=True,
+        capture_output=True,
+        text=True,
+    )
+    module_file = out.stdout.strip().splitlines()[-1]
+    assert module_file.startswith(str(zpath) + os.sep), module_file
