@@ -29,11 +29,9 @@ Physical plan: every signature column is read zero-copy through
 signature.list_layout; _band_keys_from_values computes each doc's m
 component minima in the C kernel band_minima_c (numpy reduceat when it is
 unavailable) and folds each r-run into a 64-bit band key (fmix64 +
-FNV-style polynomial fold), b keys per doc. band_table (mapInArrow)
-emits the exploded (url, band_id, band_key) rows directly;
-make_band_keys_udf (an Arrow UDF, for the streaming path) returns the b
-keys as one array per doc, b-element arrays instead of m-element ones
-keeping the JVM explode small.
+FNV-style polynomial fold), b keys per doc. band_table (mapInArrow) is
+the one banding operator — pipeline, index_tables and the incremental
+matcher — and emits the exploded (url, band_id, band_key) rows directly.
 """
 
 from __future__ import annotations
@@ -43,9 +41,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     LongType,
     StructField,
@@ -79,32 +75,6 @@ def _fmix64(k: np.ndarray) -> np.ndarray:
     return k
 
 
-def make_band_keys_udf(cfg: PipelineConfig):
-    """Arrow UDF: sig array<bigint> -> array<bigint> of n_bands band keys.
-
-    Empty/short signatures yield an empty array (no bands emitted).
-    Same layout and kernel as band_table (_band_keys_from_values), so
-    streaming and batch band keys are identical by construction
-    (tests/test_band_key_parity.py pins it).
-    """
-    n_bands = cfg.n_bands
-    key_type = pa.list_(pa.field("element", pa.int64(), nullable=False))
-
-    @F.arrow_udf(ArrayType(LongType(), containsNull=False))
-    def band_keys_udf(sig: pa.Array) -> pa.Array:
-        vals, starts, lens = list_layout(sig)
-        nonzero, keys = _band_keys_from_values(vals, starts, lens, cfg)
-        counts = np.zeros(len(sig), dtype=np.int32)
-        counts[nonzero] = n_bands
-        offsets = np.zeros(len(sig) + 1, dtype=np.int32)
-        np.cumsum(counts, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets), pa.array(keys.ravel()), type=key_type
-        )
-
-    return band_keys_udf
-
-
 def _band_keys_from_values(
     values: np.ndarray,
     starts: np.ndarray,
@@ -112,8 +82,7 @@ def _band_keys_from_values(
     cfg: PipelineConfig,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(nonempty_row_indices, keys int64[n_nonempty, n_bands]) from the
-    list_layout of a batch's signature column (shared by the Arrow UDF and
-    band_table)."""
+    list_layout of a batch's signature column (band_table's kernel)."""
     a_params, b_params = _band_params(cfg)
     n_bands, r = cfg.n_bands, cfg.rows_per_band
     m = n_bands * r
@@ -131,8 +100,8 @@ def _band_keys_from_values(
     # C fast path (round 8): per-doc multiply-shift minima with the doc's
     # <= band_input_k values L1-resident — the numpy reduceat formulation
     # streams m full-length product arrays through memory per batch.
-    # Wrap-around arithmetic identical; the streaming/batch band-key
-    # equality tests pin both paths.
+    # Wrap-around arithmetic identical; tests/test_band_key_parity.py
+    # pins both paths.
     comp = _hash_cext.band_minima_c(
         values_u64, starts[nonzero], k_nz, a_params, b_params
     )
@@ -166,8 +135,7 @@ def band_table(
     band_minima_c kernel (numpy reduceat when it is unavailable), and the
     exploded (url, band_id, band_key) rows are emitted directly — no
     per-doc Python lists in, no array column + posexplode on the JVM side
-    out. Docs with empty signatures emit no rows (same as the old
-    explode)."""
+    out. Docs with null or empty signatures emit no rows."""
     n_bands = cfg.n_bands
     src = signatures.select(url_col, "sig")
     out_schema = StructType(

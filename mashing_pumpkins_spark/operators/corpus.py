@@ -326,9 +326,10 @@ def gopher_rule_columns(
     alpha_class: str = "[a-z]",
     stopwords: list[str] | None = None,
 ) -> list[tuple[str, Column]]:
-    """The (name, boolean Column) list behind gopher_rules — exposed so
-    stream-side admission (streaming/curation_stream.py) applies the
-    identical gates without an id-keyed join.
+    """The (name, boolean Column) list behind gopher_rules — exposed so a
+    caller can apply the identical gates as plain Columns (pure Column
+    algebra, so they also run unchanged on a streaming DataFrame) without
+    an id-keyed join.
 
     English defaults (as published); for a language-neutral or
     per-language battery pass ``alpha_class`` (e.g. ``"\\p{L}"`` — Java
@@ -424,8 +425,8 @@ def bench_gram_bloom(
     text_col: str = "text",
 ):
     """Bloom bitarray over a benchmark's distinct word n-grams — the
-    blocklist build shared by decontaminate_bloom and the streaming
-    admission gate (one definition, one tokenization, one hash family).
+    blocklist build of decontaminate_bloom (one definition, one
+    tokenization, one hash family).
     The distinct-gram collect is a one-off driver job; the returned array
     is the caller's to broadcast (and to reuse across corpora/streams)."""
     grams = [
@@ -493,8 +494,7 @@ def decontaminate_bloom(
 
 def bloom_contamination_flags(texts, arr, n: int, m_bits: int, k_hashes: int):
     """int32 flag per text: 1 iff ANY word n-gram probes fully set in the
-    bloom bitarray `arr`. Shared by decontaminate_bloom and the streaming
-    admission gate so batch and stream flag identically.
+    bloom bitarray `arr` (decontaminate_bloom's probe).
 
     Gram tokenization mirrors words_array's JVM semantics exactly (the
     no-false-negative contract vs `decontaminate` needs byte-identical

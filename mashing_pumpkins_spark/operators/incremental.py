@@ -7,19 +7,23 @@ admission is:
 
     new batch
       -> optional intra-batch dedup (full flow pipeline on the batch only)
-      -> sketch + band the survivors (same kernels, same config ->
-         bit-identical keys to the committed run)
-      -> band-key equi-join against the committed bands
+      -> sketch_table + band_table on the survivors (the batch pipeline's
+         operators, same config -> bit-identical keys to the committed run)
+      -> (band_id, band_key) equi-join against the committed bands
       -> exact Jaccard verify vs committed signatures (>= tau)
       -> split: matches (near-dup of corpus) / fresh (admit + index delta)
 
 Scale shape (100 TB corpus, small-to-medium batch): the corpus side is
 touched only through the band equi-join (shuffled hash join keyed by
-band_key; with the committed bands bucketed by band_key the batch side
-alone shuffles) and the verify join (one signature row per candidate).
-Batch cost scales with the batch, not the corpus — the property that
-makes rolling corpus refreshes affordable. The streaming twin of this
-operator is streaming/near_dup_stream.py (same join shape, same kernels).
+(band_id, band_key), the candidates stage's bucket; with the committed
+bands bucketed on it the batch side alone shuffles) and the verify join
+(one signature row per candidate). Batch cost scales with the batch, not
+the corpus — the property that makes rolling corpus refreshes affordable.
+The matcher, streaming_near_dup_matches, holds no batch-only operator, so
+it also runs on a Structured Streaming source: each micro-batch joins the
+static snapshot statelessly, and only the dropDuplicates on (new_url,
+match_url) keeps state (two url strings per emitted pair; bound it with
+withWatermark + dropDuplicatesWithinWatermark upstream for unbounded runs).
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.banding import band_table
 from ..operators.signature import sketch_table
-from ..streaming.near_dup_stream import streaming_near_dup_matches
+from ..operators.verify import _jaccard_udf
 
 
 def index_tables(
@@ -46,6 +50,48 @@ def index_tables(
         cfg.sketch,
     )
     return sigs, band_table(sigs, cfg)
+
+
+def streaming_near_dup_matches(
+    stream: DataFrame,
+    static_signatures: DataFrame,
+    static_bands: DataFrame,
+    cfg: PipelineConfig,
+    url_col: str = "url",
+    text_col: str = "text",
+) -> DataFrame:
+    """docs(url, text), batch or streaming, x committed (signatures,
+    bands) -> (new_url, match_url, jaccard >= tau)."""
+    sigs = sketch_table(stream, cfg.sketch, url_col, text_col)
+    # band_table keeps the caller's id column and drops sig, so the
+    # signature rides through it inside a struct id: joining the bands
+    # back to the signatures would be a stream-stream join on a stream.
+    new = F.struct(F.col(url_col).alias("url"), "sig").alias("new")
+    banded = band_table(sigs.select(new, "sig"), cfg, url_col="new")
+    index = static_bands.select(
+        "band_id", "band_key", F.col(url_col).alias("match_url")
+    )
+    cands = (
+        banded.join(index, ["band_id", "band_key"])
+        .select(
+            F.col("new.url").alias("new_url"),
+            F.col("new.sig").alias("new_sig"),
+            "match_url",
+        )
+        .where(F.col("new_url") != F.col("match_url"))
+        .dropDuplicates(["new_url", "match_url"])
+    )
+    static_sig = static_signatures.select(
+        F.col(url_col).alias("match_url"), F.col("sig").alias("match_sig")
+    )
+    return (
+        cands.join(static_sig, "match_url")
+        .withColumn(
+            "jaccard", F.round(_jaccard_udf("new_sig", "match_sig"), 9)
+        )
+        .where(F.col("jaccard") >= cfg.jaccard_threshold)
+        .select("new_url", "match_url", "jaccard")
+    )
 
 
 def incremental_near_dup(

@@ -6,8 +6,8 @@ operator, `sketch_table`: a mapInArrow that reads each Arrow batch's text
 bytes zero-copy, hashes the whole batch in a single vectorized pass, and
 takes per-document bottom-k by unique+truncate (same set, no heap needed —
 the heap is an artifact of single-pass streaming execution). Every
-signature in the package — pipeline, rollup, sharding, incremental and
-streaming admission, the entry queries — comes from it.
+signature in the package — pipeline, rollup, sharding, incremental
+admission (batch or stream), the entry queries — comes from it.
 
 Plan shape: narrow projection into the operator (id, text only) so Parquet
 column pruning survives; no shuffle — the sketch is per-row. The counted

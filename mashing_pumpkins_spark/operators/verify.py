@@ -112,6 +112,11 @@ def _jaccard_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     return pa.array(_jaccard(vals, starts, lens, viol, ia, ia + len(a)))
 
 
+# Were it deterministic, Catalyst would push a filter on the score below
+# the projection that computes it and score every pair twice.
+_jaccard_udf = _jaccard_udf.asNondeterministic()
+
+
 def _join_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     # merge hint: this path only runs when the dispatch has already ruled
     # out a broadcastable slice, so both sides are large — but the pair

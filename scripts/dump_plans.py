@@ -10,13 +10,31 @@ stages, no interpreted lambdas in hot paths).
 from __future__ import annotations
 
 import pathlib
+import re
 import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
+# Exchange plan ids and CollectMetrics names change on every run; fixed
+# placeholders keep a regenerated PLANS.md diff down to real plan changes.
+_RUN_IDS = [
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (
+        re.compile(r"CollectMetrics [0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"),
+        "CollectMetrics <uuid>",
+    ),
+]
+# Expression ids come from one JVM-wide counter whose value at a given plan
+# varies between runs, so each plan's ids are renumbered by first appearance.
+_EXPR_ID = re.compile(r"(?<=[\w)])#(\d+)")
+
 
 def _fmt(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for pattern, placeholder in _RUN_IDS:
+        plan = pattern.sub(placeholder, plan)
+    ids: dict[str, int] = {}
+    return _EXPR_ID.sub(lambda m: f"#{ids.setdefault(m[1], len(ids))}", plan)
 
 
 def main() -> None:
@@ -220,9 +238,9 @@ def main() -> None:
             "Check: the same scorer, decided once, scores both rounds' "
             "pairs. Prefilter joins carry slice(sig,1,64) — 512B/side, not "
             "the full signature; the exact pass joins full sigs only for "
-            "survivors; Jaccard runs in ArrowEvalPython (the _jaccard_udf "
-            "Arrow UDF: both signature columns read zero-copy, one C "
-            "sorted-merge call per Arrow batch, numpy fallback "
+            "survivors; Jaccard runs in ArrowEvalPython, one node per pass "
+            "(the _jaccard_udf Arrow UDF: both signature columns read "
+            "zero-copy, one C sorted-merge call per Arrow batch, numpy fallback "
             "bit-identical), never Catalyst array_intersect. (Round-8: "
             "when the candidate slice fits the 160MB broadcast cap — by "
             "the maxsize bound, the counted url set, or the actual-bytes "
@@ -255,10 +273,13 @@ def main() -> None:
         (
             "incremental near-dup admission (batch vs committed index)",
             inc_matches,
-            "Check: committed side enters ONLY through the band_key "
-            "equi-join and the per-candidate signature join — no scan of "
-            "committed text, no cartesian; batch cost scales with the "
-            "batch, not the corpus.",
+            "Check: the batch is sketched and banded by the pipeline's "
+            "MapInArrow operators (the signature rides through banding in "
+            "the struct id); committed side enters ONLY through the "
+            "(band_id, band_key) equi-join and the per-candidate signature "
+            "join — no scan of committed text, no cartesian; one "
+            "_jaccard_udf node; batch cost scales with the batch, not the "
+            "corpus.",
         ),
         (
             "embedding threshold-pair LSH (production 8x16 index)",

@@ -1,19 +1,18 @@
-"""Streaming and batch band keys must be identical: make_band_keys_udf (the
-Arrow UDF the streaming path explodes) and band_table (the batch
-mapInArrow) share list_layout and _band_keys_from_values. Exploding the
-UDF's keys with their position as band_id must give exactly band_table's
-rows — on null and empty signatures, on Arrow batches that split the table
-mid-way, and on the numpy minima path over a sliced ListArray."""
+"""band_table's keys are one function of the signature: its rows must
+equal the band keys _band_keys_from_values computes in the driver over the
+same signatures (C minima kernel), on Arrow batches that split the table
+mid-way, and through the numpy minima fallback over a sliced ListArray.
+Null and empty signatures emit no rows."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from mashing_pumpkins_spark.config import PipelineConfig
-from mashing_pumpkins_spark.operators.banding import band_table, make_band_keys_udf
+from mashing_pumpkins_spark.operators.banding import _band_keys_from_values, band_table
+from mashing_pumpkins_spark.operators.signature import list_layout
 
 CFG = PipelineConfig(n_bands=9, rows_per_band=3, band_input_k=64)
 
@@ -37,13 +36,6 @@ def sigs(spark):
     return spark.createDataFrame(_signatures(), "url string, sig array<bigint>")
 
 
-def _udf_rows(sigs) -> set:
-    exploded = sigs.select(
-        "url", F.posexplode(make_band_keys_udf(CFG)("sig")).alias("band_id", "band_key")
-    )
-    return {(r["url"], r["band_id"], r["band_key"]) for r in exploded.collect()}
-
-
 def _table_rows(sigs) -> set:
     return {
         (r["url"], r["band_id"], r["band_key"])
@@ -51,11 +43,23 @@ def _table_rows(sigs) -> set:
     }
 
 
+def _driver_rows(arr: pa.Array, urls: list) -> set:
+    """_band_keys_from_values over one signature column, exploded with each
+    key's position as band_id."""
+    nonzero, keys = _band_keys_from_values(*list_layout(arr), CFG)
+    return {
+        (urls[i], b, int(key))
+        for i, row in zip(nonzero, keys)
+        for b, key in enumerate(row)
+    }
+
+
 def test_band_keys_udf_matches_band_table(sigs):
-    got = _udf_rows(sigs)
+    rows = _signatures()
+    arr = pa.array([s for _, s in rows], pa.list_(pa.int64()))
     exp = _table_rows(sigs)
-    assert got == exp
-    assert len(exp) == CFG.n_bands * (len(_signatures()) - 2)
+    assert exp == _driver_rows(arr, [u for u, _ in rows])
+    assert len(exp) == CFG.n_bands * (len(rows) - 2)
     assert not {u for u, _, _ in exp} & {"u004", "u011"}
 
 
@@ -65,7 +69,6 @@ def test_band_keys_udf_matches_band_table_across_small_batches(spark, sigs):
     prev = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        assert _udf_rows(sigs) == exp
         assert _table_rows(sigs) == exp
     finally:
         spark.conf.set(key, prev)
@@ -73,19 +76,16 @@ def test_band_keys_udf_matches_band_table_across_small_batches(spark, sigs):
 
 def test_band_keys_udf_numpy_minima_on_sliced_array(sigs, monkeypatch):
     """Worker environments are fixed when the session starts, so the numpy
-    minima path runs in the driver: the UDF's function over a sliced
+    minima path runs in the driver: _band_keys_from_values over a sliced
     ListArray, against band_table's rows from the C kernel."""
     from mashing_pumpkins_spark.hashkernels import _hash_cext
 
-    by_url: dict = {}
-    for url, _, key in sorted(_table_rows(sigs)):
-        by_url.setdefault(url, []).append(key)
     rows = _signatures()
     arr = pa.array([s for _, s in rows], pa.list_(pa.int64()))
+    lo, n = 3, 40
+    urls = [u for u, _ in rows[lo : lo + n]]
+    exp = {r for r in _table_rows(sigs) if r[0] in urls}
     monkeypatch.setenv("MP_SPARK_HASH_CEXT", "0")
     assert _hash_cext.load() is None
-    lo, n = 3, 40
-    got = make_band_keys_udf(CFG).func(arr.slice(lo, n))
-    assert len(got) == n
-    for (url, _), keys in zip(rows[lo : lo + n], got.to_pylist()):
-        assert keys == by_url.get(url, []), url
+    assert _driver_rows(arr.slice(lo, n), urls) == exp
+    assert len(exp) == CFG.n_bands * (n - 2)

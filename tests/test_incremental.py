@@ -2,13 +2,21 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mashing_pumpkins_spark.config import PipelineConfig, SketchConfig
 from mashing_pumpkins_spark.operators.incremental import (
     incremental_near_dup,
     index_tables,
+    streaming_near_dup_matches,
 )
+
+
+# Spark jobs of incremental_near_dup plus collecting both outputs on
+# test_incremental_job_budget's 4-doc batch, measured when the budget was set.
+JOBS_PLAIN = 17
+JOBS_INTRA = 40
 
 
 def _cfg():
@@ -177,3 +185,61 @@ def test_incremental_multi_batch_soak_equals_from_scratch(spark, tmp_path):
         total += fresh_n
         assert sig_n == total
         assert band_n == total * cfg.n_bands
+
+
+def test_matcher_buckets_on_band_id_and_band_key(spark):
+    """A bucket is (band_id, band_key), as in the candidates stage: a
+    committed doc whose every key sits under a different band_id is no
+    candidate, even with a signature equal to the batch doc's."""
+    cfg = _cfg()
+    batch = _corpus(spark, [("b1", _doc("b1"))])
+    sigs, bands = index_tables(batch, cfg)
+    committed_sigs = sigs.withColumn("url", F.lit("shifted"))
+    shifted = bands.select(
+        F.lit("shifted").alias("url"),
+        ((F.col("band_id") + 1) % cfg.n_bands).alias("band_id"),
+        "band_key",
+    )
+    assert streaming_near_dup_matches(batch, committed_sigs, shifted, cfg).collect() == []
+    matches = streaming_near_dup_matches(
+        batch, committed_sigs, bands.withColumn("url", F.lit("shifted")), cfg
+    )
+    assert [(r.new_url, r.match_url, r.jaccard) for r in matches.collect()] == [
+        ("b1", "shifted", 1.0)
+    ]
+
+
+@pytest.mark.parametrize("intra_batch, budget", [(False, JOBS_PLAIN), (True, JOBS_INTRA)])
+def test_incremental_job_budget(spark, intra_batch, budget):
+    """Admitting a small batch and reading both outputs stays within a
+    fixed number of Spark jobs (the count measured when the budget was
+    set); a new eager step or a re-planned join that adds jobs fails."""
+    cfg = _cfg()
+    committed = _corpus(spark, [(f"c{i}", _doc(f"c{i}")) for i in range(3)])
+    sigs, bands = (t.localCheckpoint() for t in index_tables(committed, cfg))
+    batch = _corpus(
+        spark,
+        [
+            ("b1", _doc("bx")),
+            ("b2", _doc("bx").replace("bxw59", "x")),
+            ("b3", _doc("c1")),
+            ("b4", _doc("b4")),
+        ],
+    )
+    group = f"incremental_job_budget_{intra_batch}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        matches, fresh = incremental_near_dup(
+            batch, sigs, bands, cfg, intra_batch=intra_batch
+        )
+        got = [(r.new_url, r.match_url) for r in matches.collect()]
+        admitted = sorted(r.url for r in fresh.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == [("b3", "c1")]
+    assert admitted == (["b1", "b4"] if intra_batch else ["b1", "b2", "b4"])
+    assert jobs <= budget, jobs

@@ -462,7 +462,7 @@ def test_streaming_near_dup_matches(spark, tmp_path):
     from mashing_pumpkins_spark.config import PipelineConfig
     from mashing_pumpkins_spark.operators.banding import band_table
     from mashing_pumpkins_spark.operators.signature import sketch_table
-    from mashing_pumpkins_spark.streaming.near_dup_stream import (
+    from mashing_pumpkins_spark.operators.incremental import (
         streaming_near_dup_matches,
     )
 
@@ -495,9 +495,12 @@ def test_streaming_near_dup_matches(spark, tmp_path):
     out = streaming_near_dup_matches(
         stream, spark.read.parquet(sp), spark.read.parquet(bp), cfg
     )
-    # the stream is sketched by the batch operator (sketch_table's
-    # mapInArrow), not by a per-row pandas UDF
-    assert "MapInArrow" in out._jdf.queryExecution().analyzed().toString()
+    # the stream is sketched and banded by the batch operators
+    # (sketch_table's and band_table's mapInArrow): no per-row UDF, no
+    # explode of a band-key array
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.count("MapInArrow") == 2, plan
+    assert "Generate" not in plan and "band_keys_udf" not in plan, plan
     q = (
         out.writeStream.format("memory")
         .queryName("near_dup_stream_test")
@@ -512,185 +515,3 @@ def test_streaming_near_dup_matches(spark, tmp_path):
     assert ("n0", "c1") in got, got
     assert all(u != "n1" for u, _ in got), got
     assert all(r["jaccard"] >= 0.8 for r in rows)
-
-
-def test_streaming_admission_gate_matches_batch_operators(spark, tmp_path):
-    """Curation-on-ingest: the streaming gate must admit/reject exactly as
-    the batch gopher_rules + decontaminate_bloom operators do."""
-    import pandas as pd
-
-    from mashing_pumpkins_spark.operators.corpus import (
-        decontaminate_bloom,
-        gopher_rules,
-    )
-    from mashing_pumpkins_spark.streaming.curation_stream import streaming_admission
-
-    stops = "the and of to is in that for with a"
-    good = (" ".join(f"word{i}" for i in range(60)) + " " + stops).strip()
-    contaminated = good + " alpha beta gamma delta epsilon zeta"
-    low_quality = "too short " + stops
-    bench_rows = [(100, "bench doc holding alpha beta gamma delta epsilon zeta", "s")]
-    benchmark = spark.createDataFrame(
-        bench_rows, "doc_id long, text string, source string"
-    )
-
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    pd.DataFrame(
-        {"url": ["ok", "dirty", "junk"], "text": [good, contaminated, low_quality]}
-    ).to_parquet(src / "b1.parquet")
-    stream = spark.readStream.schema("url string, text string").parquet(str(src))
-    out = streaming_admission(stream, benchmark, n=4, m_bits=1 << 20)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("admission_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["url"]: r for r in spark.sql("select * from admission_test").collect()}
-    assert got["ok"]["admitted"] is True
-    assert got["dirty"]["contaminated"] is True and got["dirty"]["admitted"] is False
-    assert got["junk"]["quality_ok"] is False and got["junk"]["admitted"] is False
-
-    # batch parity: same flags from the batch operators on the same rows
-    batch = spark.createDataFrame(
-        [(1, good, "s"), (2, contaminated, "s"), (3, low_quality, "s")],
-        "doc_id long, text string, source string",
-    )
-    gq = {r["doc_id"]: r["keep"] for r in gopher_rules(batch).collect()}
-    bc = {
-        r["doc_id"]: r["contaminated"]
-        for r in decontaminate_bloom(batch, benchmark, n=4, m_bits=1 << 20).collect()
-    }
-    assert gq == {1: True, 2: True, 3: False}
-    assert (bool(bc[1]), bool(bc[2]), bool(bc[3])) == (
-        got["ok"]["contaminated"],
-        got["dirty"]["contaminated"],
-        got["junk"]["contaminated"],
-    )
-
-
-def test_streaming_admission_multibatch_parity(spark, tmp_path):
-    """VERDICT r6 item 7: the admission gate must be exactly-once and
-    flag-identical to the batch operators when the corpus arrives over
-    MULTIPLE micro-batches (one input file per trigger), not just in the
-    single-batch fixture above. Full-outer-join comparison so a row
-    dropped or duplicated at a batch boundary fails, not just a wrong
-    flag. scripts/streaming_parity_sf01.py runs this same check at
-    sf0.1 (8 micro-batches, 4,500 docs, recorded in BENCH/BASELINE.md)."""
-    import pandas as pd
-
-    from mashing_pumpkins_spark.operators.corpus import (
-        decontaminate_bloom,
-        gopher_rules,
-    )
-    from mashing_pumpkins_spark.streaming.curation_stream import streaming_admission
-
-    stops = "the and of to is in that for with a"
-    benchmark = spark.createDataFrame(
-        [(100, "bench doc holding alpha beta gamma delta epsilon zeta", "s")],
-        "doc_id long, text string, source string",
-    )
-    rows = []
-    for i in range(12):
-        body = " ".join(f"tok{i}w{j}" for j in range(60)) + " " + stops
-        if i % 4 == 1:
-            body += " alpha beta gamma delta epsilon zeta"  # contaminated
-        if i % 4 == 2:
-            body = f"short {i} " + stops  # fails r_nwords
-        rows.append((f"u{i}", body))
-    src = tmp_path / "stream_mb_in"
-    src.mkdir()
-    for b in range(3):  # 3 files -> 3 micro-batches under maxFilesPerTrigger=1
-        pd.DataFrame(rows[b * 4 : (b + 1) * 4], columns=["url", "text"]).to_parquet(
-            src / f"b{b}.parquet"
-        )
-    stream = (
-        spark.readStream.schema("url string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = streaming_admission(stream, benchmark, n=4, m_bits=1 << 20)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("admission_mb_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 3
-
-    import pyspark.sql.functions as F
-
-    batch = spark.createDataFrame(rows, "url string, text string")
-    quality = gopher_rules(batch, id_col="url").select(
-        "url", F.coalesce(F.col("keep"), F.lit(False)).alias("b_quality_ok")
-    )
-    contam = decontaminate_bloom(batch, benchmark, n=4, m_bits=1 << 20, id_col="url")
-    flags = quality.join(
-        contam.select("url", (F.col("contaminated") == 1).alias("b_contaminated")),
-        "url",
-    ).withColumn("b_admitted", F.col("b_quality_ok") & ~F.col("b_contaminated"))
-    joined = (
-        spark.sql("select * from admission_mb_test")
-        .join(flags, "url", "full_outer")
-        .collect()
-    )
-    assert len(joined) == 12
-    for r in joined:
-        assert r["quality_ok"] == r["b_quality_ok"], r
-        assert r["contaminated"] == r["b_contaminated"], r
-        assert r["admitted"] == r["b_admitted"], r
-    # the fixture must exercise all three outcomes
-    outcomes = {(r["quality_ok"], r["contaminated"]) for r in joined}
-    assert (True, False) in outcomes and (True, True) in outcomes
-    assert (False, False) in outcomes
-
-
-def test_streaming_admission_html_input(spark, tmp_path):
-    """Raw-crawl ingest shape: a stream of (url, html) goes through the
-    native extractor before the gates; undecodable payloads are rejected,
-    and good pages gate exactly as their extracted text would."""
-    import pandas as pd
-
-    from mashing_pumpkins_spark.operators.extraction import render_html
-    from mashing_pumpkins_spark.streaming.curation_stream import streaming_admission
-
-    stops = "the and of to is in that for with a"
-    good = (" ".join(f"word{i}" for i in range(60)) + " " + stops).strip()
-    low_quality = "too short " + stops
-    benchmark = spark.createDataFrame(
-        [(100, "bench doc holding alpha beta gamma delta epsilon zeta", "s")],
-        "doc_id long, text string, source string",
-    )
-    src = tmp_path / "stream_html_in"
-    src.mkdir()
-    pd.DataFrame(
-        {
-            "url": ["ok", "junk", "broken"],
-            "html": [
-                render_html(good, "ok", boilerplate=True),
-                render_html(low_quality, "junk"),
-                b"<p>\xff\xfe not utf8</p>",
-            ],
-        }
-    ).to_parquet(src / "b1.parquet")
-    stream = spark.readStream.schema("url string, html binary").parquet(str(src))
-    out = streaming_admission(stream, benchmark, n=4, m_bits=1 << 20, html_input=True)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("admission_html_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["url"]: r for r in spark.sql("select * from admission_html_test").collect()
-    }
-    assert got["ok"]["admitted"] is True
-    assert got["junk"]["quality_ok"] is False and got["junk"]["admitted"] is False
-    assert got["broken"]["quality_ok"] is False and got["broken"]["admitted"] is False

@@ -10,6 +10,7 @@ from mashing_pumpkins_spark.config import PipelineConfig
 from mashing_pumpkins_spark.operators.banding import band_table
 from mashing_pumpkins_spark.operators.candidates import candidate_pairs, cross_label_pairs
 from mashing_pumpkins_spark.operators.connected_components import connected_components_auto
+from mashing_pumpkins_spark.operators.incremental import streaming_near_dup_matches
 from mashing_pumpkins_spark.operators.signature import sketch_table
 from mashing_pumpkins_spark.operators.verify import verified_edges
 from mashing_pumpkins_spark.sources.synthetic import generate_pages
@@ -26,10 +27,17 @@ def plan_frames(spark):
     edges = verified_edges(pairs, sigs, cfg, broadcast_cap_bytes=0)
     labels, _ = connected_components_auto(edges)
     round2 = cross_label_pairs(bands, labels, cfg)
-    return {"bands": bands, "pairs": pairs, "edges": edges, "round2": round2}
+    matches = streaming_near_dup_matches(pages, sigs, bands, cfg)
+    return {
+        "bands": bands,
+        "pairs": pairs,
+        "edges": edges,
+        "round2": round2,
+        "matches": matches,
+    }
 
 
-@pytest.mark.parametrize("name", ["bands", "pairs", "edges", "round2"])
+@pytest.mark.parametrize("name", ["bands", "pairs", "edges", "round2", "matches"])
 def test_no_cartesian_product(plan_frames, name):
     plan = plan_frames[name]._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, name
@@ -47,6 +55,18 @@ def test_forced_verify_join_path_never_broadcasts(plan_frames):
     edges.collect()  # the adaptive re-plan must keep the strategy too
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, plan
+
+
+@pytest.mark.parametrize("name, passes", [("edges", 2), ("matches", 1)])
+def test_jaccard_udf_scores_each_pair_once_per_pass(plan_frames, name, passes):
+    """One Jaccard evaluation per scoring pass: the forced join path has
+    two (prefilter and exact), the incremental matcher one. A filter on
+    the score pushed below the projection that computes it would evaluate
+    the UDF again. An executed adaptive plan also prints its initial
+    plan, so only the final one is counted."""
+    plan = plan_frames[name]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython [_jaccard_udf(") == passes, plan
 
 
 def test_band_pairing_is_bucket_keyed_and_memory_bounded(plan_frames):
